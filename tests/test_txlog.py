@@ -60,17 +60,57 @@ def test_staged_files_invisible_until_commit(spark):
     assert txlog.vacuum(path, grace_seconds=0) == []  # nothing left
 
 
-def test_append_retries_past_commit_race(spark):
-    """O_EXCL arbitration: if another writer claims the next version
-    first, the append retries and lands one version later — no data
-    lost, no torn log."""
+def _save_txlog(mode):
+    def save(spark, path):
+        from dss_nlp_ingestion_spark.sources.txlog_datasource import TxLogDataSource
+
+        spark.dataSource.register(TxLogDataSource)
+        _tbl(spark, [(2, "b")]).write.format("txlog").mode(mode).option(
+            "path", path
+        ).save()
+        return txlog.history(path)[-1]["version"]
+
+    return save
+
+
+# Every blind (non-rewrite) commit path: (writer, op it logs, keys and
+# columns read back afterwards).
+_BLIND_WRITERS = {
+    "append": (
+        lambda spark, path: txlog.append(_tbl(spark, [(2, "b")]), path),
+        "append", [1, 2], ["k", "v"],
+    ),
+    "restore_table": (
+        lambda spark, path: txlog.restore_table(path, 0),
+        "restore", [1], ["k", "v"],
+    ),
+    "rename_column": (
+        lambda spark, path: txlog.rename_column(path, "v", "w"),
+        "rename", [1], ["k", "w"],
+    ),
+    "txlog_writer_append": (_save_txlog("append"), "append", [1, 2], ["k", "v"]),
+    "txlog_writer_overwrite": (
+        _save_txlog("overwrite"), "overwrite", [2], ["k", "v"],
+    ),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_BLIND_WRITERS))
+def test_append_retries_past_commit_race(spark, writer):
+    """Put-if-absent arbitration: if another writer claims the next
+    version first, every blind commit retries and lands one version
+    later — no data lost, no torn log."""
+    commit, op, keys, cols = _BLIND_WRITERS[writer]
     path = tempfile.mkdtemp(prefix="dss_tx_")
     txlog.create_table(_tbl(spark, [(1, "a")]), path)
     # simulate a racing winner for version 1
     assert txlog._try_commit(path, 1, {"op": "append", "add": [], "remove": []})
-    v = txlog.append(_tbl(spark, [(2, "b")]), path)
+    v = commit(spark, path)
     assert v == 2
-    assert sorted(r["k"] for r in txlog.read(spark, path).collect()) == [1, 2]
+    assert [h["op"] for h in txlog.history(path)] == ["create", "append", op]
+    df = txlog.read(spark, path)
+    assert df.columns == cols
+    assert sorted(r["k"] for r in df.collect()) == keys
 
 
 def test_rewrite_conflict_on_stale_base(spark):
@@ -1214,17 +1254,63 @@ def test_merge_delete_update_merge_schema_across_evolution(spark):
     assert 1 not in got and got[3] == ("C", 300.0) and len(got) == 2
 
 
-def test_concurrent_merge_merge_conflict_detect_and_retry(spark, monkeypatch):
-    """r6 verdict ask #8: two concurrent MERGEs over overlapping keys.
-    The loser must (a) DETECT the conflict (never silently clobber the
-    winner's commit), (b) abort atomically when out of retries (table
-    = winner only, no partial loser rows), and (c) succeed cleanly on
-    retry against the fresh snapshot."""
+def _cow_src(spark, rows):
+    return spark.createDataFrame(rows, "k long, c string, p double")
+
+
+# Every copy-on-write retry path: (loser call with max_retries=n, op it
+# logs, check of {k: (c, p)} after the loser retried past the race).
+_COW_LOSERS = {
+    "merge_into_table": (
+        lambda spark, path, n: txlog.merge_into_table(
+            spark, path, _cow_src(spark, [(3, "A", 111.0)]), ["k"],
+            max_retries=n, stats_cols=["k"],
+        ),
+        "merge",
+        lambda got: got[3] == ("A", 111.0) and len(got) == 20,
+    ),
+    "delete_from_table": (
+        lambda spark, path, n: txlog.delete_from_table(
+            spark, path, "k = 3", stats_cols=["k"], max_retries=n,
+        ),
+        "delete",
+        lambda got: 3 not in got and got[5] == ("B5", 555.0) and len(got) == 19,
+    ),
+    "update_table": (
+        lambda spark, path, n: txlog.update_table(
+            spark, path, "k = 3", {"c": "'A'"}, stats_cols=["k"],
+            max_retries=n,
+        ),
+        "update",
+        lambda got: got[3] == ("A", 222.0) and len(got) == 20,
+    ),
+    "compact": (
+        lambda spark, path, n: txlog.compact(spark, path, max_retries=n),
+        "compact",
+        lambda got: got[3] == ("B", 222.0) and len(got) == 20,
+    ),
+    "optimize_zorder": (
+        lambda spark, path, n: txlog.optimize_zorder(
+            spark, path, ["k"], target_files=2, max_retries=n,
+        ),
+        "zorder",
+        lambda got: got[3] == ("B", 222.0) and len(got) == 20,
+    ),
+}
+
+
+@pytest.mark.parametrize("loser", sorted(_COW_LOSERS))
+def test_concurrent_merge_merge_conflict_detect_and_retry(spark, monkeypatch, loser):
+    """r6 verdict ask #8: a copy-on-write commit races a concurrent
+    MERGE over an overlapping file. The loser must (a) DETECT the
+    conflict (never silently clobber the winner's commit), (b) abort
+    atomically when out of retries (table = winner only, no partial
+    loser rows), and (c) succeed cleanly on retry against the fresh
+    snapshot."""
+    run, op, retried_ok = _COW_LOSERS[loser]
     path = tempfile.mkdtemp(prefix="dss_txmm_")
     txlog.create_table(_orders_tbl(spark, n=20, files=2), path, stats_cols=["k"])
-    src_a = spark.createDataFrame([(3, "A", 111.0)], "k long, c string, p double")
-    src_b = spark.createDataFrame([(3, "B", 222.0), (5, "B5", 555.0)],
-                                  "k long, c string, p double")
+    src_b = _cow_src(spark, [(3, "B", 222.0), (5, "B5", 555.0)])
     real_rewrite = txlog.rewrite
     state = {"armed": True}
 
@@ -1235,20 +1321,19 @@ def test_concurrent_merge_merge_conflict_detect_and_retry(spark, monkeypatch):
         return real_rewrite(df, path_, replace, expect_version, **kw)
 
     monkeypatch.setattr(txlog, "rewrite", racing_rewrite)
-    # (a)+(b): A races B on key 3, no retries left -> clean abort
+    # (a)+(b): the loser races B on key 3's file, no retries left -> clean abort
     with pytest.raises(txlog.TxConflictError):
-        txlog.merge_into_table(spark, path, src_a, ["k"], max_retries=1,
-                               stats_cols=["k"])
+        run(spark, path, 1)
     got = {r["k"]: (r["c"], r["p"]) for r in txlog.read(spark, path).collect()}
     assert got[3] == ("B", 222.0) and got[5] == ("B5", 555.0)  # winner intact
     assert len(got) == 20  # loser left NO partial rows
+    assert txlog.history(path)[-1]["op"] == "merge"
     # (c): with retries the same race resolves — loser re-reads and wins round 2
     state["armed"] = True
-    res = txlog.merge_into_table(spark, path, src_a, ["k"], max_retries=3,
-                                 stats_cols=["k"])
-    assert res["files_touched"] >= 1
-    got = {r["k"]: r["c"] for r in txlog.read(spark, path).collect()}
-    assert got[3] == "A"  # second B-merge committed, then A applied on top
+    run(spark, path, 3)
+    assert txlog.history(path)[-1]["op"] == op  # second B-merge, then the loser
+    got = {r["k"]: (r["c"], r["p"]) for r in txlog.read(spark, path).collect()}
+    assert retried_ok(got), got
 
 
 def test_checkpoint_carries_folded_renames(spark):
