@@ -5,10 +5,11 @@ Single-table logs (sources/txlog.py) give ACID per table; a consumer
 joining orders@head with lineitem@head can still observe a TORN pair
 when one table has committed an ingest batch the other hasn't (the
 classic dual-write anomaly).  This module adds the coordination layer
-Delta/Iceberg leave to external catalogs: a txn entry is an O_EXCL
-JSON file recording the exact per-table versions that belong
-together, so readers resolve one txn id and read every table AT its
-pinned version — all-or-nothing visibility without table locks.
+Delta/Iceberg leave to external catalogs: a txn entry is a JSON file,
+published put-if-absent like a table log entry (temp file + fsync +
+``os.link``, see ``txlog._publish``), recording the exact per-table
+versions that belong together, so readers resolve one txn id and read
+every table AT its pinned version — all-or-nothing visibility without table locks.
 Writers: commit each table FIRST (their own logs make that atomic),
 then publish the vector; a crash between the two leaves the last
 published vector valid (readers never see the half-ingested pair).
@@ -53,9 +54,9 @@ def _txn_ids(root: str) -> list[int]:
 
 def commit_txn(root: str, table_versions: dict[str, int]) -> int:
     """Publish a consistent version vector; returns the txn id.
-    O_EXCL create gives last-writer-loses on id collision (the loser
-    retries at the next id), the same optimistic protocol the
-    per-table logs use.  Every referenced version must already be
+    The put-if-absent publish gives last-writer-loses on id collision
+    (the loser retries at the next id), the same optimistic protocol
+    the per-table logs use.  Every referenced version must already be
     committed in its table log — the vector is metadata only."""
     for name, version in table_versions.items():
         path = os.path.join(root, name)
@@ -63,18 +64,12 @@ def commit_txn(root: str, table_versions: dict[str, int]) -> int:
             raise TornCommitError(
                 f"table {name!r} has no committed v{version}"
             )
-    os.makedirs(_txn_dir(root), exist_ok=True)
     txn = (_txn_ids(root) or [-1])[-1] + 1
-    while True:
-        p = os.path.join(_txn_dir(root), f"{txn}.json")
-        try:
-            fd = os.open(p, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            txn += 1
-            continue
-        with os.fdopen(fd, "w") as f:
-            json.dump({"txn": txn, "tables": table_versions}, f)
-        return txn
+    while not txlog._publish(
+        _txn_dir(root), f"{txn}.json", {"txn": txn, "tables": table_versions}
+    ):
+        txn += 1
+    return txn
 
 
 def txn_vector(root: str, txn: int | None = None) -> dict[str, int]:

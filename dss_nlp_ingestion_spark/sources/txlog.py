@@ -11,17 +11,22 @@ log-structured core those formats share, pure stdlib + Spark:
   files ADDED and REMOVED by that commit. The table's state at
   version V is the fold of entries 0..V — data files are immutable
   and INVISIBLE until a log entry references them.
-- Commit = write data files first, then create the next numbered log
-  entry with ``O_CREAT | O_EXCL`` — the filesystem arbitrates exactly
-  one winner per version (same primitive the advisory-locked COW
-  merge uses, but here losers RETRY against the new snapshot instead
-  of failing: blind appends always merge cleanly).
+- Commit = write data files first, then publish the next numbered log
+  entry put-if-absent (Delta's commit protocol): the complete JSON is
+  written and fsynced under a temp name in ``_txlog/``, then
+  ``os.link``-ed to ``{version:08d}.json`` — the filesystem arbitrates
+  exactly one winner per version (EEXIST = race lost), and losers
+  RETRY against the new snapshot instead of failing: blind appends
+  always merge cleanly. :func:`_publish` is the only code that
+  creates an entry file.
 - Rewrites (compaction / COW merge) declare the files they replace;
   if a concurrent commit touched any of them the rewrite raises
   ``TxConflictError`` (optimistic concurrency, writer must re-read).
-- Readers are never blocked and never see partial writes: a reader
-  folds whatever log prefix exists — a crashed writer leaves only
-  orphan data files (cleaned by ``vacuum``), never a torn table.
+- Readers are never blocked and never see partial writes: an entry
+  name appears only once its content is complete, and a reader folds
+  whatever log prefix exists. A writer killed mid-commit leaves at
+  most orphan data files and an unpublished temp entry (both cleaned
+  by ``vacuum``), never a torn table.
 - ``read(..., version=N)`` is time travel; ``history`` lists commits.
 
 Scale note: the log is O(commits) tiny JSON files; state folding is
@@ -32,6 +37,7 @@ partition pruning/pushdown behave exactly as for plain parquet.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
@@ -77,21 +83,8 @@ def _versions(path: str) -> list[int]:
 
 
 def _read_entry(path: str, version: int) -> dict:
-    """Read one log entry. The O_EXCL claim makes the file visible a
-    moment before its JSON is flushed, so an unluckily-timed reader
-    can see an empty/partial file — retry briefly before giving up
-    (the window is the time between os.open and fsync)."""
-    import time as _time
-
-    for attempt in range(5):
-        try:
-            with open(_entry_path(path, version)) as fh:
-                return json.load(fh)
-        except ValueError:
-            if attempt == 4:
-                raise
-            _time.sleep(0.02 * (attempt + 1))
-    raise AssertionError("unreachable")
+    with open(_entry_path(path, version)) as fh:
+        return json.load(fh)
 
 
 def snapshot_files(path: str, version: int | None = None) -> list[str]:
@@ -176,14 +169,34 @@ def _collect_file_stats(path: str, files: list[str], cols: list[str]) -> dict:
     return stats
 
 
-def _try_commit(path: str, version: int, entry: dict) -> bool:
-    """Atomically claim ``version``: O_EXCL create arbitrates one
-    winner; anyone else sees EEXIST and retries on a fresh snapshot."""
-    os.makedirs(_log_dir(path), exist_ok=True)
+def _publish(dirpath: str, name: str, payload: dict) -> bool:
+    """Put-if-absent: create ``dirpath/name`` holding ``payload`` as
+    JSON, or return False when the name already exists. The JSON is
+    written and fsynced under a temp name first, then ``os.link``
+    publishes it in one atomic step, so the name never exists with
+    partial content; a writer killed at any point leaves at most the
+    temp file (``.<name>.<hex>.tmp``, ignored by every entry listing
+    and reclaimed by :func:`vacuum`). Used for txlog entries and
+    multitxn vectors alike."""
+    os.makedirs(dirpath, exist_ok=True)
+    tmp = os.path.join(dirpath, f".{name}.{uuid.uuid4().hex[:12]}.tmp")
     try:
-        fd = os.open(_entry_path(path, version), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        with open(tmp, "w") as fh:
+            json.dump(payload, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.link(tmp, os.path.join(dirpath, name))
     except FileExistsError:
         return False
+    finally:
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(tmp)
+    return True
+
+
+def _try_commit(path: str, version: int, entry: dict) -> bool:
+    """Publish ``entry`` as log ``version``; False when another writer
+    won it (the caller retries on a fresh snapshot)."""
     # Commit wall-clock for AS OF reads, clamped monotone against the
     # current head so a stalled winner cannot stamp an EARLIER version
     # with a LATER time than its successors (version_at stays sane).
@@ -194,12 +207,21 @@ def _try_commit(path: str, version: int, entry: dict) -> bool:
             prev_ts = float(_read_entry(path, earlier[-1]).get("ts", 0.0))
         except (OSError, ValueError):
             prev_ts = 0.0
-    entry = dict(entry, ts=max(time.time(), prev_ts))
-    with os.fdopen(fd, "w") as fh:
-        json.dump(entry, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    return True
+    return _publish(
+        _log_dir(path), f"{version:08d}.json", dict(entry, ts=max(time.time(), prev_ts))
+    )
+
+
+def _commit(path: str, op: str, entry, max_retries: int = 10) -> int:
+    """The blind-commit loop: publish at head+1 and, on a lost race,
+    retry on the new head. ``entry`` is the log entry, or a function
+    of the head version that builds it (and may raise to abort).
+    Returns the committed version."""
+    for _ in range(max_retries):
+        head = (_versions(path) or [-1])[-1]
+        if _try_commit(path, head + 1, entry(head) if callable(entry) else entry):
+            return head + 1
+    raise TxConflictError(f"{op} lost {max_retries} commit races at {path}")
 
 
 def create_table(
@@ -244,11 +266,7 @@ def append(
         entry["stats"] = _collect_file_stats(
             path, files, _physical_stats_cols(path, stats_cols, renames=renames)
         )
-    for _ in range(max_retries):
-        head = (_versions(path) or [-1])[-1]
-        if _try_commit(path, head + 1, entry):
-            return head + 1
-    raise TxConflictError(f"append lost {max_retries} commit races at {path}")
+    return _commit(path, "append", entry, max_retries)
 
 
 def rewrite(
@@ -266,16 +284,17 @@ def rewrite(
     ``expect_version`` AND removed one of the files being replaced,
     the base snapshot is stale -> TxConflictError (caller re-reads).
     Concurrent APPENDS don't conflict (disjoint files) — the rewrite
-    commits on top of them. ``txn`` = (app_id, epoch) stamps the
-    commit for :func:`last_committed_txn` replay detection."""
+    commits on top of them, up to 10 lost races. ``txn`` =
+    (app_id, epoch) stamps the commit for :func:`last_committed_txn`
+    replay detection."""
     files = _write_data_files(df, path)
     entry: dict = {"op": op, "add": files, "remove": list(replace)}
     if txn is not None:
         entry["txn"] = {"app": txn[0], "epoch": int(txn[1])}
     if stats_cols:
         entry["stats"] = _collect_file_stats(path, files, stats_cols)
-    while True:
-        head = (_versions(path) or [-1])[-1]
+
+    def unless_stale(head: int) -> dict:
         if head > expect_version:
             # someone committed since our snapshot: conflict iff they
             # removed any file we're replacing
@@ -287,8 +306,65 @@ def rewrite(
                 raise TxConflictError(
                     f"rewrite base is stale: {gone} removed by a concurrent commit"
                 )
-        if _try_commit(path, head + 1, entry):
-            return head + 1
+        return entry
+
+    return _commit(path, op, unless_stale)
+
+
+def _rewrite_retry(path: str, op: str, max_retries: int, attempt):
+    """The copy-on-write retry loop: ``attempt(head)`` plans against
+    the snapshot at ``head`` and commits through the module-level
+    :func:`rewrite`; a ``TxConflictError`` (a concurrent commit removed
+    a file the plan replaces) re-plans on the fresh head."""
+    last_err: TxConflictError | None = None
+    for _ in range(max_retries):
+        head = (_versions(path) or [-1])[-1]
+        if head < 0:
+            raise ValueError(f"no tx table at {path}")
+        try:
+            return attempt(head)
+        except TxConflictError as exc:
+            last_err = exc
+    raise TxConflictError(
+        f"{op} lost {max_retries} commit races at {path}: {last_err}"
+    )
+
+
+def _touched_files(
+    spark, path: str, head: int, candidates: list[str], match
+) -> list[str]:
+    """The files among ``candidates`` holding at least one row that
+    ``match`` (a DataFrame -> DataFrame filter or semi-join over the
+    candidates' rows plus their file name ``_f``) keeps: one pass over
+    the candidates. Rows carry the LOGICAL schema (rename chain at
+    ``head`` resolved), which predicates and merge keys target."""
+    from pyspark.sql import functions as F
+
+    if not candidates:
+        return []
+    rows = _apply_renames(
+        spark.read.option("mergeSchema", "true").parquet(*candidates)
+        .withColumn("_f", F.input_file_name()),
+        path,
+        head,
+    )
+    # input_file_name() yields file: URIs; the log stores plain paths
+    # — normalize before diffing against it.
+    return [
+        re.sub(r"^file:/{0,2}(?=/)", "", r["_f"])
+        for r in match(rows).select("_f").distinct().collect()
+    ]
+
+
+def _summary(version, touched: int, total: int, pruned: int, **extra) -> dict:
+    """The summary dict the COW operations return."""
+    return {
+        "version": version,
+        "files_touched": touched,
+        "files_total": total,
+        "files_skipped_by_stats": pruned,
+        **extra,
+    }
 
 
 def read(
@@ -338,12 +414,9 @@ def compact(
     commute with the rewrite (disjoint files); a concurrent rewrite
     of the same base raises ``TxConflictError`` and is retried here
     against the fresh snapshot."""
-    for _ in range(max_retries):
-        head = (_versions(path) or [-1])[-1]
-        if head < 0:
-            raise ValueError(f"no tx table at {path}")
-        live = snapshot_files(path, head)
-        rel = [_stored_name(path, f) for f in live]
+
+    def attempt(head: int) -> int:
+        rel = [_stored_name(path, f) for f in snapshot_files(path, head)]
         # read() yields the LOGICAL schema; fold back so compacted
         # files keep the physical-schema invariant (a concurrent
         # append of a pre-rename producer would otherwise mix
@@ -351,11 +424,9 @@ def compact(
         df = _unapply_renames(
             read(spark, path, version=head), path, head
         ).coalesce(target_files)
-        try:
-            return rewrite(df, path, rel, expect_version=head, op="compact")
-        except TxConflictError:
-            continue
-    raise TxConflictError(f"compaction lost {max_retries} rewrite races at {path}")
+        return rewrite(df, path, rel, expect_version=head, op="compact")
+
+    return _rewrite_retry(path, "compaction", max_retries, attempt)
 
 
 def vacuum(path: str, grace_seconds: float = 3600.0) -> list[str]:
@@ -370,28 +441,38 @@ def vacuum(path: str, grace_seconds: float = 3600.0) -> list[str]:
     files the winning commit then references, tearing the table (r5
     advisor finding). The window makes the common race safe; running
     with ``grace_seconds=0`` requires the caller to guarantee no
-    writer is active (same precondition as :func:`vacuum_retain`)."""
+    writer is active (same precondition as :func:`vacuum_retain`).
+
+    Unpublished log-entry temp files (a writer killed inside
+    :func:`_publish`) are removed by the same age rule; the returned
+    list names data files only."""
     referenced: set[str] = set()
     for v in _versions(path):
         e = _read_entry(path, v)
         referenced.update(e.get("add", []))
     data_root = os.path.join(path, "data")
     now = time.time()
+
+    def expired(full: str) -> bool:
+        try:
+            return now - os.path.getmtime(full) >= grace_seconds
+        except OSError:
+            return False  # racing writer renamed/removed it — skip
+
     removed = []
     for dirpath, _dirs, names in os.walk(data_root):
         for n in names:
             full = os.path.join(dirpath, n)
             rel = os.path.relpath(full, data_root)
-            if not n.endswith(".parquet") or rel in referenced:
-                continue
-            try:
-                age = now - os.path.getmtime(full)
-            except OSError:
-                continue  # racing writer renamed/removed it — skip
-            if age < grace_seconds:
-                continue
-            os.remove(full)
-            removed.append(rel)
+            if n.endswith(".parquet") and rel not in referenced and expired(full):
+                os.remove(full)
+                removed.append(rel)
+    log_dir = _log_dir(path)
+    for n in os.listdir(log_dir) if os.path.isdir(log_dir) else []:
+        full = os.path.join(log_dir, n)
+        if n.startswith(".") and n.endswith(".tmp") and expired(full):
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(full)
     return removed
 
 
@@ -674,12 +755,8 @@ def optimize_zorder(
     )
     from pyspark.sql import functions as F
 
-    for _ in range(max_retries):
-        head = (_versions(path) or [-1])[-1]
-        if head < 0:
-            raise ValueError(f"no tx table at {path}")
-        live = snapshot_files(path, head)
-        rel = [_stored_name(path, f) for f in live]
+    def attempt(head: int) -> int:
+        rel = [_stored_name(path, f) for f in snapshot_files(path, head)]
         df = read(spark, path, version=head)
         stats = df.agg(
             *[F.min(c).alias(f"_min_{c}") for c in zorder_cols],
@@ -700,18 +777,16 @@ def optimize_zorder(
             .sortWithinPartitions("_z")
             .drop("_z")
         )
-        try:
-            return rewrite(
-                _unapply_renames(clustered, path, head),
-                path,
-                rel,
-                expect_version=head,
-                op="zorder",
-                stats_cols=_physical_stats_cols(path, list(zorder_cols), head),
-            )
-        except TxConflictError:
-            continue
-    raise TxConflictError(f"zorder lost {max_retries} rewrite races at {path}")
+        return rewrite(
+            _unapply_renames(clustered, path, head),
+            path,
+            rel,
+            expect_version=head,
+            op="zorder",
+            stats_cols=_physical_stats_cols(path, list(zorder_cols), head),
+        )
+
+    return _rewrite_retry(path, "zorder", max_retries, attempt)
 
 
 def vacuum_retain(path: str, horizon_version: int) -> dict:
@@ -759,7 +834,7 @@ def vacuum_retain(path: str, horizon_version: int) -> dict:
             removed.append(rel)
         except FileNotFoundError:
             pass
-    # persist the horizon (O_EXCL-free: monotone max, last writer wins)
+    # persist the horizon (not put-if-absent: monotone max, last writer wins)
     hpath = os.path.join(_log_dir(path), "_vacuum_horizon")
     prev = -1
     try:
@@ -918,6 +993,7 @@ def merge_into_table(
     sit outside every stats range. Returns a summary dict:
     version committed, files touched/total/stat-skipped, and whether
     the commit degraded to an append."""
+    from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
     from dss_nlp_ingestion_spark.operators.merge import (
@@ -925,48 +1001,23 @@ def merge_into_table(
         merge_into_with_delete,
     )
 
-    # r12 (guide §5): the merge consumes ``source`` three times —
-    # the pruning-bounds aggregate, the touched-file semi-join, and
-    # the COW rewrite itself — and for incremental callers (CDC
-    # replication, matview refresh) ``source`` is a whole
-    # net-changes pipeline (changed-file scan + full-row groupBy)
-    # that re-ran per consumer. Persist it for the duration of the
-    # merge: it is O(commit delta) by the operator's own cost model,
-    # never O(table), and the split timer showed the re-computation
-    # was ~70% of the CDC probe where the tag said "write IO".
-    # Released in the finally below — nothing outlives the call.
-    source = source.persist()
-    try:
-        return _merge_into_table_body(
-            spark, path, source, key_cols, delete_col, insert_only,
-            stats_cols, max_retries, txn, null_safe, F,
-            merge_into, merge_into_with_delete,
+    def semi_join(rows: DataFrame) -> DataFrame:
+        cand = rows.select(*key_cols, "_f")
+        src_keys = source.select(
+            *[F.col(k).alias(f"_sk_{k}") for k in key_cols]
+        ).distinct()
+        eq = [(cand[k], src_keys[f"_sk_{k}"]) for k in key_cols]
+        sem = reduce(
+            lambda a, b: a & b,
+            [t.eqNullSafe(s) if null_safe else t == s for t, s in eq],
         )
-    finally:
-        source.unpersist()
+        return cand.join(src_keys, sem, "left_semi")
 
-
-def _merge_into_table_body(
-    spark, path, source, key_cols, delete_col, insert_only,
-    stats_cols, max_retries, txn, null_safe, F,
-    merge_into, merge_into_with_delete,
-) -> dict:
-    last_err: TxConflictError | None = None
-    for _ in range(max_retries):
-        head = (_versions(path) or [-1])[-1]
-        if head < 0:
-            raise ValueError(f"no tx table at {path}")
+    def attempt(head: int) -> dict:
         if txn is not None and last_committed_txn(path, txn[0]) >= txn[1]:
-            return {
-                "version": head,
-                "files_touched": 0,
-                "files_total": 0,
-                "files_skipped_by_stats": 0,
-                "appended": False,
-                "skipped": True,
-            }
+            return _summary(head, 0, 0, 0, appended=False, skipped=True)
         live = snapshot_files(path, head)
-        skipped = 0
+        pruned = 0
         candidates = live
         if len(key_cols) == 1:
             key = key_cols[0]
@@ -982,45 +1033,12 @@ def _merge_into_table_body(
             if bounds["lo"] is not None and not (
                 null_safe and source_has_null_key
             ):
-                candidates, skipped = plan_pruned_files(
+                candidates, pruned = plan_pruned_files(
                     path, key, bounds["lo"], bounds["hi"], version=head
                 )
-        touched: list[str] = []
-        if candidates:
-            # Source keys target the LOGICAL schema — resolve the
-            # rename chain before matching, like every other snapshot
-            # reader (r6 review finding).
-            cand_keys = _apply_renames(
-                spark.read.option("mergeSchema", "true").parquet(*candidates)
-                .withColumn("_f", F.input_file_name()),
-                path,
-                head,
-            ).select(*key_cols, "_f")
-            src_keys = source.select(
-                *[F.col(k).alias(f"_sk_{k}") for k in key_cols]
-            ).distinct()
-            if null_safe:
-                sem = reduce(
-                    lambda a, b: a & b,
-                    [
-                        cand_keys[k].eqNullSafe(src_keys[f"_sk_{k}"])
-                        for k in key_cols
-                    ],
-                )
-            else:
-                sem = reduce(
-                    lambda a, b: a & b,
-                    [cand_keys[k] == src_keys[f"_sk_{k}"] for k in key_cols],
-                )
-            # input_file_name() yields file: URIs; the log stores
-            # plain paths — normalize before diffing against it.
-            touched = [
-                re.sub(r"^file:/{0,2}(?=/)", "", r["_f"])
-                for r in cand_keys.join(src_keys, sem, "left_semi")
-                .select("_f")
-                .distinct()
-                .collect()
-            ]
+        # Source keys target the LOGICAL schema — the touched-file scan
+        # resolves the rename chain before matching (r6 review finding).
+        touched = _touched_files(spark, path, head, candidates, semi_join)
         if not touched:
             # No key matches anywhere: pure insert, commutes with
             # every concurrent commit -> blind retryable append.
@@ -1032,27 +1050,16 @@ def _merge_into_table_body(
                     ~F.coalesce(F.col(delete_col), F.lit(False))
                 ).drop(delete_col)
             if inserts.isEmpty():
+                v = head
                 if txn is not None:
                     # the watermark must still advance: commit a
                     # metadata-only stamped entry, else CDC/matview
                     # consumers re-scan an ever-growing source window
                     v = append_txn(inserts.limit(0), path, txn[0], txn[1])
-                    return {
-                        "version": v if v is not None else head,
-                        "files_touched": 0,
-                        "files_total": len(live),
-                        "files_skipped_by_stats": skipped,
-                        "appended": False,
-                        "skipped": v is None,
-                    }
-                return {
-                    "version": head,
-                    "files_touched": 0,
-                    "files_total": len(live),
-                    "files_skipped_by_stats": skipped,
-                    "appended": False,
-                    "skipped": False,
-                }
+                return _summary(
+                    head if v is None else v, 0, len(live), pruned,
+                    appended=False, skipped=v is None,
+                )
             phys_stats = _physical_stats_cols(path, stats_cols, head)
             if txn is not None:
                 v = append_txn(
@@ -1060,14 +1067,9 @@ def _merge_into_table_body(
                 )
             else:
                 v = append(inserts, path, stats_cols=phys_stats)
-            return {
-                "version": v,
-                "files_touched": 0,
-                "files_total": len(live),
-                "files_skipped_by_stats": skipped,
-                "appended": True,
-                "skipped": v is None,
-            }
+            return _summary(
+                v, 0, len(live), pruned, appended=True, skipped=v is None
+            )
         target_touched = _apply_renames(
             spark.read.option("mergeSchema", "true").parquet(*touched), path, head
         )
@@ -1081,31 +1083,38 @@ def _merge_into_table_body(
                 target_touched, source, key_cols, insert_only=insert_only,
                 null_safe=null_safe,
             )
-        rel = [_stored_name(path, f) for f in touched]
-        try:
-            v = rewrite(
-                _unapply_renames(merged, path, head),
-                path,
-                rel,
-                expect_version=head,
-                op="merge",
-                stats_cols=_physical_stats_cols(path, stats_cols, head),
-                txn=txn,
-            )
-        except TxConflictError as exc:
-            last_err = exc
-            continue
-        return {
-            "version": v,
-            "files_touched": len(touched),
-            "files_total": len(live),
-            "files_skipped_by_stats": skipped,
-            "appended": False,
-            "skipped": False,
-        }
-    raise TxConflictError(
-        f"merge lost {max_retries} commit races at {path}: {last_err}"
-    )
+        v = rewrite(
+            _unapply_renames(merged, path, head),
+            path,
+            [_stored_name(path, f) for f in touched],
+            expect_version=head,
+            op="merge",
+            stats_cols=_physical_stats_cols(path, stats_cols, head),
+            txn=txn,
+        )
+        return _summary(
+            v, len(touched), len(live), pruned, appended=False, skipped=False
+        )
+
+    # r12 (guide §5): the merge consumes ``source`` three times —
+    # the pruning-bounds aggregate, the touched-file semi-join, and
+    # the COW rewrite itself — and for incremental callers (CDC
+    # replication, matview refresh) ``source`` is a whole
+    # net-changes pipeline (changed-file scan + full-row groupBy)
+    # that re-ran per consumer. Persist it for the duration of the
+    # merge: it is O(commit delta) by the operator's own cost model,
+    # never O(table), and the split timer showed the re-computation
+    # was ~70% of the CDC probe where the tag said "write IO".
+    # A source the caller already cached is used as is and stays
+    # cached; only a cache this call made is released below.
+    cache_here = source.storageLevel == StorageLevel.NONE
+    if cache_here:
+        source.persist()
+    try:
+        return _rewrite_retry(path, "merge", max_retries, attempt)
+    finally:
+        if cache_here:
+            source.unpersist()
 
 
 def last_committed_txn(path: str, app_id: str) -> int:
@@ -1152,11 +1161,7 @@ def append_txn(
         entry["stats"] = _collect_file_stats(
             path, files, _physical_stats_cols(path, stats_cols, renames=renames)
         )
-    for _ in range(max_retries):
-        head = (_versions(path) or [-1])[-1]
-        if _try_commit(path, head + 1, entry):
-            return head + 1
-    raise TxConflictError(f"append_txn lost {max_retries} commit races at {path}")
+    return _commit(path, "append_txn", entry, max_retries)
 
 
 def delete_from_table(
@@ -1180,66 +1185,10 @@ def delete_from_table(
     the oracle)."""
     from pyspark.sql import functions as F
 
-    last_err: TxConflictError | None = None
-    for _ in range(max_retries):
-        head = (_versions(path) or [-1])[-1]
-        if head < 0:
-            raise ValueError(f"no tx table at {path}")
-        live = snapshot_files(path, head)
-        skipped = 0
-        candidates = live
-        if prune_col is not None:
-            candidates, skipped = plan_pruned_files(
-                path, prune_col, prune_lo, prune_hi, version=head
-            )
-        touched: list[str] = []
-        if candidates:
-            # Predicates are written against the LOGICAL schema:
-            # resolve the rename chain before evaluating (r5 advisor —
-            # raw parquet exposes physical names).
-            touched = [
-                re.sub(r"^file:/{0,2}(?=/)", "", r["_f"])
-                for r in _apply_renames(
-                    spark.read.option("mergeSchema", "true").parquet(*candidates)
-                    .withColumn("_f", F.input_file_name()),
-                    path,
-                    head,
-                )
-                .filter(F.expr(predicate))
-                .select("_f")
-                .distinct()
-                .collect()
-            ]
-        if not touched:
-            return {
-                "version": head,
-                "files_touched": 0,
-                "files_total": len(live),
-                "files_skipped_by_stats": skipped,
-            }
-        kept = _unapply_renames(
-            _apply_renames(spark.read.option("mergeSchema", "true").parquet(*touched), path, head)
-            .filter(~F.expr(predicate)),
-            path,
-            head,
-        )
-        rel = [_stored_name(path, f) for f in touched]
-        try:
-            v = rewrite(
-                kept, path, rel, expect_version=head, op="delete",
-                stats_cols=_physical_stats_cols(path, stats_cols, head),
-            )
-        except TxConflictError as exc:
-            last_err = exc
-            continue
-        return {
-            "version": v,
-            "files_touched": len(touched),
-            "files_total": len(live),
-            "files_skipped_by_stats": skipped,
-        }
-    raise TxConflictError(
-        f"delete lost {max_retries} commit races at {path}: {last_err}"
+    return _rewrite_where(
+        spark, path, "delete", predicate, (prune_col, prune_lo, prune_hi),
+        stats_cols, max_retries,
+        lambda tgt: tgt.filter(~F.expr(predicate)),
     )
 
 
@@ -1260,43 +1209,7 @@ def update_table(
     rows in those files are carried unchanged)."""
     from pyspark.sql import functions as F
 
-    last_err: TxConflictError | None = None
-    for _ in range(max_retries):
-        head = (_versions(path) or [-1])[-1]
-        if head < 0:
-            raise ValueError(f"no tx table at {path}")
-        live = snapshot_files(path, head)
-        skipped = 0
-        candidates = live
-        if prune_col is not None:
-            candidates, skipped = plan_pruned_files(
-                path, prune_col, prune_lo, prune_hi, version=head
-            )
-        touched: list[str] = []
-        if candidates:
-            # Predicates/SET expressions target the LOGICAL schema —
-            # resolve the rename chain before evaluating.
-            touched = [
-                re.sub(r"^file:/{0,2}(?=/)", "", r["_f"])
-                for r in _apply_renames(
-                    spark.read.option("mergeSchema", "true").parquet(*candidates)
-                    .withColumn("_f", F.input_file_name()),
-                    path,
-                    head,
-                )
-                .filter(F.expr(predicate))
-                .select("_f")
-                .distinct()
-                .collect()
-            ]
-        if not touched:
-            return {
-                "version": head,
-                "files_touched": 0,
-                "files_total": len(live),
-                "files_skipped_by_stats": skipped,
-            }
-        tgt = _apply_renames(spark.read.option("mergeSchema", "true").parquet(*touched), path, head)
+    def updated(tgt: DataFrame) -> DataFrame:
         unknown = set(set_exprs) - set(tgt.columns)
         if unknown:
             raise ValueError(
@@ -1304,7 +1217,7 @@ def update_table(
                 f"(table has {tgt.columns})"
             )
         match = F.expr(predicate)
-        updated = tgt.select(
+        return tgt.select(
             *[
                 (
                     F.when(match, F.expr(set_exprs[c])).otherwise(F.col(c))
@@ -1314,28 +1227,54 @@ def update_table(
                 for c in tgt.columns
             ]
         )
-        rel = [_stored_name(path, f) for f in touched]
-        try:
-            v = rewrite(
-                _unapply_renames(updated, path, head),
-                path,
-                rel,
-                expect_version=head,
-                op="update",
-                stats_cols=_physical_stats_cols(path, stats_cols, head),
-            )
-        except TxConflictError as exc:
-            last_err = exc
-            continue
-        return {
-            "version": v,
-            "files_touched": len(touched),
-            "files_total": len(live),
-            "files_skipped_by_stats": skipped,
-        }
-    raise TxConflictError(
-        f"update lost {max_retries} commit races at {path}: {last_err}"
+
+    return _rewrite_where(
+        spark, path, "update", predicate, (prune_col, prune_lo, prune_hi),
+        stats_cols, max_retries, updated,
     )
+
+
+def _rewrite_where(
+    spark, path, op, predicate, prune, stats_cols, max_retries, transform
+) -> dict:
+    """The file-pruned COW plan shared by DELETE and UPDATE: the files
+    holding a row that matches ``predicate`` (after stats pruning on
+    ``prune`` = (col, lo, hi) when col is set) are rewritten as
+    ``transform`` of their rows. Predicates and ``transform`` target
+    the LOGICAL schema (r5 advisor — raw parquet exposes physical
+    names)."""
+    from pyspark.sql import functions as F
+
+    prune_col, prune_lo, prune_hi = prune
+
+    def attempt(head: int) -> dict:
+        live = snapshot_files(path, head)
+        pruned = 0
+        candidates = live
+        if prune_col is not None:
+            candidates, pruned = plan_pruned_files(
+                path, prune_col, prune_lo, prune_hi, version=head
+            )
+        touched = _touched_files(
+            spark, path, head, candidates,
+            lambda rows: rows.filter(F.expr(predicate)),
+        )
+        if not touched:
+            return _summary(head, 0, len(live), pruned)
+        tgt = _apply_renames(
+            spark.read.option("mergeSchema", "true").parquet(*touched), path, head
+        )
+        v = rewrite(
+            _unapply_renames(transform(tgt), path, head),
+            path,
+            [_stored_name(path, f) for f in touched],
+            expect_version=head,
+            op=op,
+            stats_cols=_physical_stats_cols(path, stats_cols, head),
+        )
+        return _summary(v, len(touched), len(live), pruned)
+
+    return _rewrite_retry(path, op, max_retries, attempt)
 
 
 # ---------------------------------------------------------------------------
@@ -1417,23 +1356,21 @@ def restore_table(path: str, version: int, max_retries: int = 10) -> int:
             f"cannot restore to {version}: below vacuum horizon "
             f"{_vacuum_horizon(path)} at {path}"
         )
+    # raises ValueError when ``version`` (so the table) does not exist
     target = {_stored_name(path, f) for f in snapshot_files(path, version)}
-    for _ in range(max_retries):
-        head = (_versions(path) or [-1])[-1]
-        if head < 0:
-            raise ValueError(f"no tx table at {path}")
+
+    def entry(head: int) -> dict:
         current = {
             _stored_name(path, f) for f in snapshot_files(path, head)
         }
-        entry = {
+        return {
             "op": "restore",
             "add": sorted(target - current),
             "remove": sorted(current - target),
             "restore_of": version,
         }
-        if _try_commit(path, head + 1, entry):
-            return head + 1
-    raise TxConflictError(f"restore lost {max_retries} commit races at {path}")
+
+    return _commit(path, "restore", entry, max_retries)
 
 
 def clone_table(src_path: str, dst_path: str, version: int | None = None) -> int:
@@ -1579,14 +1516,10 @@ def rename_column(path: str, old: str, new: str, max_retries: int = 10) -> int:
     :func:`read` applies the folded mapping after the parquet scan.
     Chained renames compose (a->b then b->c reads physical a as c);
     time travel below the rename sees the old name. O(1) metadata."""
+    if not _versions(path):
+        raise ValueError(f"no tx table at {path}")
     entry = {"op": "rename", "add": [], "remove": [], "rename": [old, new]}
-    for _ in range(max_retries):
-        head = (_versions(path) or [-1])[-1]
-        if head < 0:
-            raise ValueError(f"no tx table at {path}")
-        if _try_commit(path, head + 1, entry):
-            return head + 1
-    raise TxConflictError(f"rename lost {max_retries} commit races at {path}")
+    return _commit(path, "rename", entry, max_retries)
 
 
 def _folded_renames(path: str, version: int | None = None) -> list[tuple[str, str]]:

@@ -188,10 +188,11 @@ def register(spark) -> None:
 # ---------------------------------------------------------------------------
 # The Python writer API is EXACTLY the log's two-phase commit: each
 # task stages one parquet file and reports it in its commit message;
-# the driver's commit() writes the O_EXCL log entry referencing only
-# reported files. Speculative/retried task leftovers are never
-# referenced (vacuum cleans them) — the same crash story as the
-# library write path, now behind Spark's own writer surface.
+# the driver's commit() publishes the log entry (temp file + fsync +
+# os.link, put-if-absent) referencing only reported files.
+# Speculative/retried task leftovers are never referenced (vacuum
+# cleans them) — the same crash story as the library write path, now
+# behind Spark's own writer surface.
 
 from dataclasses import dataclass
 
@@ -231,26 +232,17 @@ class _TxLogWriter(DataSourceWriter):
 
     def commit(self, messages):  # driver-side: the atomic log commit
         files = [m.rel for m in messages if m is not None]
-        if self.overwrite:
-            for _ in range(10):
-                head = (txlog._versions(self.path) or [-1])[-1]
-                if head < 0:
-                    remove: list[str] = []
-                else:
-                    remove = [
-                        txlog._stored_name(self.path, f)
-                        for f in txlog.snapshot_files(self.path, head)
-                    ]
-                entry = {"op": "overwrite", "add": files, "remove": remove}
-                if txlog._try_commit(self.path, head + 1, entry):
-                    return
-            raise txlog.TxConflictError(f"overwrite lost commit races at {self.path}")
-        for _ in range(10):
-            head = (txlog._versions(self.path) or [-1])[-1]
+        if not self.overwrite:
             entry = {"op": "append", "add": files, "remove": []}
-            if txlog._try_commit(self.path, head + 1, entry):
-                return
-        raise txlog.TxConflictError(f"append lost commit races at {self.path}")
+            txlog._commit(self.path, "append", entry)
+            return
+
+        def overwrite(head: int) -> dict:
+            live = txlog.snapshot_files(self.path, head) if head >= 0 else []
+            remove = [txlog._stored_name(self.path, f) for f in live]
+            return {"op": "overwrite", "add": files, "remove": remove}
+
+        txlog._commit(self.path, "overwrite", overwrite)
 
     def abort(self, messages):  # nothing referenced -> nothing visible
         import os
@@ -314,15 +306,9 @@ class _TxLogStreamWriter(DataSourceStreamWriter):
             "remove": [],
             "txn": {"app": self.app, "epoch": int(batchId)},
         }
-        for _ in range(10):
-            head = (txlog._versions(self.path) or [-1])[-1]
-            if txlog._try_commit(self.path, head + 1, entry):
-                # bound log-replay cost on long-lived streaming tables
-                txlog.maybe_checkpoint(self.path)
-                return
-        raise txlog.TxConflictError(
-            f"stream append lost commit races at {self.path}"
-        )
+        txlog._commit(self.path, "stream append", entry)
+        # bound log-replay cost on long-lived streaming tables
+        txlog.maybe_checkpoint(self.path)
 
     def abort(self, messages, batchId: int) -> None:  # noqa: N803
         import os

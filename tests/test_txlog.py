@@ -4,6 +4,8 @@ optimistic retry, rewrite conflicts, time travel, vacuum safety."""
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 import tempfile
 
 import pytest
@@ -24,6 +26,7 @@ def test_create_append_read_roundtrip(spark):
     assert got == [(1, "a"), (2, "b"), (3, "c")]
     ops = [h["op"] for h in txlog.history(path)]
     assert ops == ["create", "append"]
+    assert not [n for n in os.listdir(path + "/_txlog") if n.endswith(".tmp")]
 
 
 def test_time_travel_reads_old_snapshot(spark):
@@ -58,6 +61,76 @@ def test_staged_files_invisible_until_commit(spark):
     assert removed and all(r.endswith(".parquet") for r in removed)
     assert sorted(r["k"] for r in txlog.read(spark, path).collect()) == [1]
     assert txlog.vacuum(path, grace_seconds=0) == []  # nothing left
+
+
+# A writer process killed inside the entry publish: ``step`` is the
+# call it dies in — ``dump`` (file created, nothing written yet),
+# ``link`` (complete temp entry, not yet published) or ``unlink``
+# (published, temp not yet removed). os._exit skips every finally
+# block, as a SIGKILL would.
+_KILLED_WRITER = """
+import json, os, sys
+from dss_nlp_ingestion_spark.sources import multitxn, txlog
+step, kind, target = sys.argv[1:4]
+setattr(json if step == "dump" else os, step, lambda *a, **k: os._exit(9))
+if kind == "txlog":
+    txlog.rename_column(target, "v", "w")
+else:
+    multitxn.commit_txn(target, {"t": 0})
+"""
+
+
+def _kill_writer(kind, step, target):
+    res = subprocess.run(
+        [sys.executable, "-c", _KILLED_WRITER, step, kind, target],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True, text=True, timeout=120,
+    )
+    assert res.returncode == 9, res.stderr
+
+
+@pytest.mark.parametrize("step", ["dump", "link", "unlink"])
+def test_writer_killed_mid_commit_keeps_last_complete_snapshot(spark, step):
+    """Crash safety of the publish: whatever step the writer dies in,
+    readers see the last complete snapshot (the killed commit only if
+    it was published), the next writer commits at the next version,
+    and vacuum reclaims the leftover temp entry past its grace
+    window."""
+    path = tempfile.mkdtemp(prefix="dss_txkill_")
+    txlog.create_table(_tbl(spark, [(1, "a")]), path)
+    _kill_writer("txlog", step, path)
+    published = step == "unlink"
+    ops = ["create", "rename"] if published else ["create"]
+    assert [h["op"] for h in txlog.history(path)] == ops
+    df = txlog.read(spark, path)
+    assert df.columns == (["k", "w"] if published else ["k", "v"])
+    assert [r["k"] for r in df.collect()] == [1]
+    assert txlog.append(df, path) == len(ops)
+    log_dir = os.path.join(path, "_txlog")
+
+    def temps():
+        return [n for n in os.listdir(log_dir) if n.endswith(".tmp")]
+
+    assert len(temps()) == 1
+    assert txlog.vacuum(path) == [] and len(temps()) == 1
+    txlog.vacuum(path, grace_seconds=0)
+    assert temps() == []
+    assert sorted(r["k"] for r in txlog.read(spark, path).collect()) == [1, 1]
+
+
+@pytest.mark.parametrize("step", ["dump", "link", "unlink"])
+def test_multitxn_writer_killed_mid_commit_keeps_last_vector(spark, step):
+    from dss_nlp_ingestion_spark.sources import multitxn
+
+    root = tempfile.mkdtemp(prefix="dss_multitxn_kill_")
+    txlog.create_table(_tbl(spark, [(1, "a")]), os.path.join(root, "t"))
+    assert multitxn.commit_txn(root, {"t": 0}) == 0
+    _kill_writer("multitxn", step, root)
+    n = 2 if step == "unlink" else 1
+    assert multitxn._txn_ids(root) == list(range(n))
+    assert multitxn.txn_vector(root) == {"t": 0}
+    assert multitxn.commit_txn(root, {"t": 0}) == n
+    assert multitxn.txn_vector(root, n) == {"t": 0}
 
 
 def _save_txlog(mode):
@@ -499,6 +572,10 @@ def _orders_tbl(spark, n=40, files=4):
     )
 
 
+def _cow_src(spark, rows):
+    return spark.createDataFrame(rows, "k long, c string, p double")
+
+
 def test_merge_into_table_upserts_and_inserts(spark):
     path = tempfile.mkdtemp(prefix="dss_txmerge_")
     txlog.create_table(_orders_tbl(spark), path, stats_cols=["k"])
@@ -513,6 +590,24 @@ def test_merge_into_table_upserts_and_inserts(spark):
     assert got[4] == ("c4", 8.0)         # untouched row intact
     assert res["files_touched"] >= 1
     assert txlog.history(path)[-1]["op"] == "merge"
+
+
+def test_merge_into_table_keeps_caller_cache(spark):
+    """The merge caches its source for its own duration only: a source
+    the caller cached stays cached, an uncached one is left uncached."""
+    from pyspark import StorageLevel
+
+    path = tempfile.mkdtemp(prefix="dss_txmerge_")
+    txlog.create_table(_orders_tbl(spark, n=20, files=2), path, stats_cols=["k"])
+    cached = _cow_src(spark, [(3, "x", 1.0)]).cache()
+    txlog.merge_into_table(spark, path, cached, ["k"], stats_cols=["k"])
+    assert cached.is_cached and cached.storageLevel != StorageLevel.NONE
+    cached.unpersist()
+    plain = _cow_src(spark, [(4, "y", 2.0)])
+    txlog.merge_into_table(spark, path, plain, ["k"], stats_cols=["k"])
+    assert not plain.is_cached and plain.storageLevel == StorageLevel.NONE
+    got = {r["k"]: r["c"] for r in txlog.read(spark, path).collect()}
+    assert got[3] == "x" and got[4] == "y" and len(got) == 20
 
 
 def test_merge_into_table_rewrites_only_matching_files(spark):
@@ -1254,10 +1349,6 @@ def test_merge_delete_update_merge_schema_across_evolution(spark):
     assert 1 not in got and got[3] == ("C", 300.0) and len(got) == 2
 
 
-def _cow_src(spark, rows):
-    return spark.createDataFrame(rows, "k long, c string, p double")
-
-
 # Every copy-on-write retry path: (loser call with max_retries=n, op it
 # logs, check of {k: (c, p)} after the loser retried past the race).
 _COW_LOSERS = {
@@ -1330,8 +1421,10 @@ def test_concurrent_merge_merge_conflict_detect_and_retry(spark, monkeypatch, lo
     assert txlog.history(path)[-1]["op"] == "merge"
     # (c): with retries the same race resolves — loser re-reads and wins round 2
     state["armed"] = True
-    run(spark, path, 3)
+    res = run(spark, path, 3)
     assert txlog.history(path)[-1]["op"] == op  # second B-merge, then the loser
+    if isinstance(res, dict):  # merge/delete/update summaries
+        assert res["files_touched"] >= 1
     got = {r["k"]: (r["c"], r["p"]) for r in txlog.read(spark, path).collect()}
     assert retried_ok(got), got
 
