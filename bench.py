@@ -1,6 +1,7 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE short JSON summary line as the LAST line of stdout:
+(default: the sf0.1 fixture, see ``SF_DIR``) on local[$SPARK_GRAFT_CPUS]
+(default: the host's core count) and prints ONE short JSON summary line
+as the LAST line of stdout:
 {"metric": ..., "value": total_sec, "unit": "sec", "cold_total": ...,
 "n_queries": ..., "n_errors": ..., "sf": ...} (≤500 bytes — survives
 tail-truncating captures). The full per-query map is written to
@@ -31,7 +32,7 @@ from dss_nlp_ingestion_spark.plans.registry import (  # noqa: E402
 from dss_nlp_ingestion_spark.session import get_spark, release_cached  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 #: Output record (default BENCH_FULL.json); the sf1 scaling run
 #: (tools/make_sf.py data) writes BENCH_SF1.json instead.
 BENCH_OUT = os.environ.get("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")

@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dss_nlp_ingestion_spark.operators.similarity import _fold, _sqdiff, _stack
+
 #: committed default artifact (trained on the deterministic synthetic
 #: sample below; provenance pinned by tests).
 DEFAULT_PQ_ARTIFACT = __file__.replace("pq.py", "pq_codebook_v1.npz")
@@ -271,58 +273,8 @@ def pq_adc_sql(
     return "(" + " + ".join(terms) + ")"
 
 
-def pq_query_lut_column(
-    model: dict, vec_col: str = "embedding", dim: int = 64
-) -> Column:
-    """Per-QUERY ADC lookup table as one ``array<double>`` column of
-    m*k entries (s-major: entry ``s*k + c`` is the squared L2 distance
-    between the query's subvector ``s`` and codebook centroid ``c``).
-
-    This is the batched-query form of :func:`adc_lookup_table` — the
-    query vector is a COLUMN (an incoming batch), so the LUT is
-    computed engine-side once per query row, and per-candidate ADC
-    becomes m array lookups instead of O(dim) arithmetic (Jégou et
-    al., 2011 §III — the IVFADC search kernel). Same transform-over-
-    literal-centroids codegen form as :func:`_sub_argmin` (compact
-    generated code), same 0.0-seeded left fold, so the DuckDB twin
-    (:func:`pq_query_lut_sql`, a '+'-chain per entry) is
-    bit-identical."""
-    m, k = model["m"], model["k"]
-    books = model["codebooks"]
-    sub = dim // m
-    emb = F.col(vec_col)
-    parts = []
-    for s in range(m):
-        cents = F.array(
-            *[
-                F.array(*[F.lit(float(books[s][c][j])) for j in range(sub)])
-                for c in range(k)
-            ]
-        )
-        subvec = F.slice(emb, s * sub + 1, sub)
-
-        def _dist(cv):
-            # ``subvec`` is bound via enclosing scope, NOT a default
-            # arg (a default arg would make F.transform treat this as
-            # the binary (element, index) lambda — hyperplane_bucket's
-            # NB); the eager transform call below freezes it per
-            # iteration.
-            return F.aggregate(
-                F.zip_with(
-                    subvec,
-                    cv,
-                    lambda x, cc: (x.cast("double") - cc) * (x.cast("double") - cc),
-                ),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            )
-
-        parts.append(F.transform(cents, lambda cv: _dist(cv)))  # noqa: B023
-    return F.concat(*parts)
-
-
 def pq_query_lut_sql(model: dict, emb_sql: str = "qv", dim: int = 64) -> str:
-    """DuckDB twin of :func:`pq_query_lut_column`: the same m*k
+    """DuckDB twin of :func:`pq_query_lut_udf`: the same m*k
     entries in the same s-major order, each a left-associated
     '+'-chain of per-component squares (identical IEEE ops).
 
@@ -348,115 +300,68 @@ def pq_query_lut_sql(model: dict, emb_sql: str = "qv", dim: int = 64) -> str:
     return "[" + ", ".join(entries) + "]"
 
 
-def pq_code_array_column(
-    model: dict, emb_col: str = "embedding", dim: int = 64
-) -> Column:
-    """The m per-subspace codes as an ``array<int>`` column (0-based
-    argmin indices, same first-match tie-break as
-    :func:`pq_code_columns`) — the storage form ADC joins want: a
-    probe-side lookup is one array load, with no per-row string
-    split (the comma-string form re-parsed 16x per candidate pair in
-    the shortlist stage)."""
-    m = model["m"]
-    emb = F.col(emb_col)
-    return F.array(
-        *[_sub_argmin(model, s, emb, dim)["i"].cast("int") for s in range(m)]
-    )
+def _sub_dists(q: np.ndarray, books: np.ndarray, s: int, sub: int) -> np.ndarray:
+    """(n, k) squared L2 distances of every row's subvector ``s`` to
+    the k centroids of subspace ``s`` — the squared-distance
+    :func:`~dss_nlp_ingestion_spark.operators.similarity._fold`, the
+    same per-component ``(x_j - c_j)^2`` '+' chain as the SQL twins
+    (:func:`pq_query_lut_sql`, :func:`pq_sub_distance_sql`), bit for
+    bit."""
+    return _fold(q[:, None, s * sub : (s + 1) * sub], books[s][None, :, :], _sqdiff)
 
 
 def pq_query_lut_udf(model: dict, dim: int = 64):
-    """Arrow-vectorized twin of :func:`pq_query_lut_column` (same
-    values, bit-for-bit): per subspace s and centroid c the squared
-    distance is accumulated COMPONENT-SEQUENTIALLY (``acc = acc +
-    (x_j - c_j)^2`` over j, vectorized across rows) — numpy
-    elementwise ufuncs are plain IEEE ops with no FMA/reassociation,
-    so the fold matches the SQL '+' chain exactly, while the plan
-    shrinks from 256 literal expression trees (interpreted
-    higher-order functions, ~ms/row) to ONE Arrow batch stage."""
+    """Per-QUERY ADC lookup table as one ``array<double>`` column of
+    m*k entries (s-major: entry ``s*k + c`` is the squared L2 distance
+    between the query's subvector ``s`` and codebook centroid ``c``).
+
+    This is the batched-query form of :func:`adc_lookup_table` — the
+    query vector is a COLUMN (an incoming batch), so the LUT is
+    computed once per query row, and per-candidate ADC becomes m array
+    lookups instead of O(dim) arithmetic (Jégou et al., 2011 §III —
+    the IVFADC search kernel). One Arrow batch stage over
+    :func:`_sub_dists`, bit-identical to the DuckDB twin
+    :func:`pq_query_lut_sql`."""
     from pyspark.sql.types import ArrayType, DoubleType
 
-    books = model["codebooks"]
-    m, k = model["m"], model["k"]
+    m = model["m"]
     sub = dim // m
-    b = np.asarray(books, dtype=np.float64)  # (m, k, sub)
+    b = np.asarray(model["codebooks"], dtype=np.float64)  # (m, k, sub)
 
     @F.pandas_udf(ArrayType(DoubleType()))
     def _lut(vs: pd.Series) -> pd.Series:
-        # One stack + exact float64 widening (r12, guide §4.2) —
-        # same values as the former per-row asarray loop.
-        q = np.stack(vs.to_numpy()).astype(np.float64, copy=False)  # (n, dim)
-        n = q.shape[0]
-        out = np.empty((n, m * k), dtype=np.float64)
-        for s in range(m):
-            qs = q[:, s * sub : (s + 1) * sub]  # (n, sub)
-            for c in range(k):
-                acc = None
-                for j in range(sub):
-                    d = qs[:, j] - b[s, c, j]
-                    t = d * d
-                    acc = t if acc is None else acc + t
-                out[:, s * k + c] = acc
-        return pd.Series(list(out))
+        q = _stack(vs)
+        return pd.Series(
+            list(np.concatenate([_sub_dists(q, b, s, sub) for s in range(m)], axis=1))
+        )
 
     return _lut
 
 
 def pq_code_array_udf(model: dict, dim: int = 64):
-    """Arrow-vectorized twin of :func:`pq_code_array_column`: same
-    component-sequential distance fold (bit-exact, see
-    :func:`pq_query_lut_udf`), argmin via ``np.argmin`` — first
-    occurrence on ties, the same tie-break as ``array_min`` /
-    ``list_position``. The encode stage drops from interpreted
-    literal-HOF evaluation to one Arrow batch pass."""
+    """The m per-subspace codes as an ``array<int>`` column (0-based
+    argmin indices over :func:`_sub_dists`; ``np.argmin`` keeps the
+    first occurrence on ties, the same tie-break as
+    :func:`pq_code_columns`' ``array_min`` and the oracles'
+    ``list_position``) — the storage form ADC joins want: a probe-side
+    lookup is one array load, with no per-row string split (the
+    comma-string form re-parsed 16x per candidate pair in the
+    shortlist stage). One Arrow batch pass."""
     from pyspark.sql.types import ArrayType, IntegerType
 
-    books = model["codebooks"]
-    m, k = model["m"], model["k"]
+    m = model["m"]
     sub = dim // m
-    b = np.asarray(books, dtype=np.float64)
+    b = np.asarray(model["codebooks"], dtype=np.float64)
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def _codes(vs: pd.Series) -> pd.Series:
-        # One stack + exact float64 widening (r12, guide §4.2).
-        q = np.stack(vs.to_numpy()).astype(np.float64, copy=False)
-        n = q.shape[0]
-        codes = np.empty((n, m), dtype=np.int32)
-        for s in range(m):
-            qs = q[:, s * sub : (s + 1) * sub]
-            dists = np.empty((n, k), dtype=np.float64)
-            for c in range(k):
-                acc = None
-                for j in range(sub):
-                    d = qs[:, j] - b[s, c, j]
-                    t = d * d
-                    acc = t if acc is None else acc + t
-                dists[:, c] = acc
-            codes[:, s] = np.argmin(dists, axis=1)
+        q = _stack(vs)
+        codes = np.stack(
+            [_sub_dists(q, b, s, sub).argmin(axis=1) for s in range(m)], axis=1
+        ).astype(np.int32)
         return pd.Series(list(codes))
 
     return _codes
-
-
-def pq_adc_from_lut_column(
-    model: dict, lut_col: str = "lut", codes_col: str = "codes"
-) -> Column:
-    """ADC distance of one (query, candidate) pair from the query's
-    LUT column and the candidate's stored ``array<int>`` codes: a
-    left-associated sum of m 0-based array lookups — the per-pair
-    search kernel is m loads + m adds, no per-dimension arithmetic."""
-    m, k = model["m"], model["k"]
-    codes_arr = F.col(codes_col)
-    terms = [
-        F.get(
-            F.col(lut_col),
-            F.lit(s * k) + F.element_at(codes_arr, s + 1),
-        )
-        for s in range(m)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
 
 
 def pq_adc_cogroup_scorer(model: dict, refine: int, query_block: int = 256):
@@ -476,9 +381,8 @@ def pq_adc_cogroup_scorer(model: dict, refine: int, query_block: int = 256):
 
     Correctness: the ADC value is accumulated s-sequentially with
     plain numpy elementwise adds — the same left-associated '+' chain
-    as :func:`pq_adc_from_lut_column` / :func:`pq_adc_from_lut_sql`,
-    so every emitted double is bit-identical to the old per-pair
-    kernel and the DuckDB oracle. Emitting only the per-(query, list)
+    as the oracle's :func:`pq_adc_from_lut_sql`, so every emitted
+    double is bit-identical to the DuckDB oracle. Emitting only the per-(query, list)
     top-``refine`` under the (adc ASC, neighbor_id ASC) total order
     is lossless for the global per-query top-``refine``: the rows of
     one list that survive the global cut form a prefix of that list's
@@ -512,7 +416,7 @@ def pq_adc_cogroup_scorer(model: dict, refine: int, query_block: int = 256):
         for lo in range(0, len(qids), query_block):
             lut_blk = luts[lo : lo + query_block]  # (b, m*k)
             # s-sequential left-associated accumulation — bit-identical
-            # per element to the '+' chain of pq_adc_from_lut_column.
+            # per element to the '+' chain of pq_adc_from_lut_sql.
             acc = lut_blk[:, 0 * k + codes[:, 0]]
             for s in range(1, m):
                 acc = acc + lut_blk[:, s * k + codes[:, s]]
@@ -535,10 +439,11 @@ def pq_adc_cogroup_scorer(model: dict, refine: int, query_block: int = 256):
 def pq_adc_from_lut_sql(
     model: dict, lut_sql: str = "l.lut", clist_sql: str = "k.clist"
 ) -> str:
-    """DuckDB twin of :func:`pq_adc_from_lut_column` — ``clist`` holds
-    1-BASED codes (list_position output), so ``s*k + clist[s+1]`` is
-    the 1-based LUT index matching Spark's ``s*k + code`` 0-based
-    ``F.get``. Same left-associated '+' chain."""
+    """ADC distance of one (query, candidate) pair in DuckDB: a
+    left-associated '+' chain of m lookups into the query's LUT list.
+    ``clist`` holds 1-BASED codes (list_position output), so
+    ``s*k + clist[s+1]`` is the 1-based LUT index matching
+    :func:`pq_adc_cogroup_scorer`'s 0-based ``s*k + code``."""
     m, k = model["m"], model["k"]
     terms = [
         f"list_extract({lut_sql}, {s * k} + list_extract({clist_sql}, {s + 1}))"

@@ -10,7 +10,9 @@ columns and similarity is a distributed operator:
   folds: identical IEEE ops in identical order are bit-identical
   across engines, whereas engine-native sums are free to reorder
   (and double→high-scale-decimal casts differ between Spark's
-  shortest-repr rounding and DuckDB's exact-binary rounding).
+  shortest-repr rounding and DuckDB's exact-binary rounding). Every
+  Arrow scoring kernel here and in ``operators.pq`` folds through the
+  one primitive :func:`_fold`.
 - brute-force top-k: broadcast the (small) query set against the
   corpus — the correctness baseline; one scan, no shuffle of the
   corpus.
@@ -23,8 +25,10 @@ columns and similarity is a distributed operator:
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
 
 def dot_exact(a: Column, b: Column) -> Column:
     """Sequential-fold dot product -> DOUBLE (deterministic: the
@@ -38,77 +42,98 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(dot_exact(a, a))
 
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    """Expression-form cosine — the exact fold the DuckDB oracles
-    mirror (dot_exact / list_reduce '+' chains). Spark evaluates the
-    higher-order functions inside INTERPRETED (never codegen), so
-    this form costs ~0.2 ms per pair; it is kept as executable
-    documentation and for contexts where a pandas UDF cannot appear
-    (inside HOF lambdas)."""
-    return dot_exact(a, b) / (l2_norm(a) * l2_norm(b))
+def _stack(vs) -> np.ndarray:
+    """One Arrow batch of array cells as an (n, dim) float64 matrix:
+    one ``np.stack`` over the object array, float32 widened exactly by
+    ``astype`` — every fold below sees the values ``dot_exact``'s casts
+    produce. Column-major, so :func:`_fold` reads each component
+    without another copy."""
+    return np.stack(vs.to_numpy()).astype(np.float64, order="F")
+
+
+def _sqdiff(x, y):
+    d = x - y
+    return d * d
+
+
+def _fold(a, b, term=np.multiply):
+    """The exact fold every similarity/PQ kernel shares:
+    ``term(a[..., j], b[..., j])`` summed component-sequentially in
+    index order, unseeded (``t0 + t1 + ...``) — the same IEEE op chain
+    as the oracles' ``list_reduce`` '+' chains (``dot_exact``'s 0.0
+    seed can change only the sign of a zero sum).
+    Elementwise ufuncs neither fuse nor reassociate, so the result is
+    bit-identical on every host (BLAS reductions follow the CPU's
+    kernel dispatch instead). Leading axes broadcast: ``(n, dim)``
+    pairs give ``(n,)``; ``a[:, None, :]`` against ``b[None, :, :]``
+    gives ``(n, k)`` without ever materializing ``(n, k, dim)``.
+    ``term=_sqdiff`` is the squared-distance form.
+
+    Each step reads one contiguous component slice (the component
+    axis moves to the front, a copy unless the input is column-major
+    like :func:`_stack`'s; a strided column read costs ~2.5x at
+    10k x 282 x 64), and ``acc += t`` rounds exactly like
+    ``acc = acc + t``."""
+    a = np.ascontiguousarray(np.moveaxis(a, -1, 0))
+    b = np.ascontiguousarray(np.moveaxis(b, -1, 0))
+    acc = term(a[0], b[0])
+    for j in range(1, len(a)):
+        acc += term(a[j], b[j])
+    return acc
+
+
+def _scoring_udf(fn, return_type: str):
+    """Arrow pandas UDF for a pure scoring kernel, marked
+    ``asNondeterministic()``. Every scoring column feeds a filter or a
+    join key downstream, and the optimizer's filter pushdown
+    duplicated a deterministic UDF — one ArrowEvalPython below the
+    pushed filter, one above for the projection — so each row paid the
+    kernel twice. The marker pins ONE evaluation per plan branch
+    (canary: ``test_scoring_udfs_evaluate_once_per_branch``). Its cost
+    is the constraint every caller must keep: the UDF must not appear
+    in a join condition or an aggregate expression, where Spark
+    rejects nondeterministic expressions."""
+    from pyspark.sql.functions import pandas_udf
+
+    return pandas_udf(fn, return_type).asNondeterministic()
 
 
 _COSINE_ARROW_UDF = None
 
 
 def cosine(a: Column, b: Column) -> Column:
-    """Pair cosine — Arrow exact-fold kernel, bit-identical to
-    :func:`cosine_expr` (component-sequential numpy folds; ufuncs
-    neither fuse nor reassociate — pinned per element by
-    tests/test_pq_adc_kernels.py) at 10-100x the throughput. This is
-    the hot kernel of every candidate-scoring join (bucketed near-dup
-    pairs, LSH/IVF probes, brute-force baselines)."""
+    """Pair cosine — Arrow kernel over :func:`_fold` (dot, |a|^2,
+    |b|^2 chains in index order; one multiply of the two sqrt's, one
+    divide), bit-identical to ``dot_exact(a, b) / (l2_norm(a) *
+    l2_norm(b))`` and the DuckDB oracles (pinned per element by
+    tests/test_pq_adc_kernels.py). Null in either input gives null.
+    This is the hot kernel of every candidate-scoring join (bucketed
+    near-dup pairs, LSH/IVF probes, brute-force baselines). It must
+    not appear in a join condition or an aggregate (see
+    :func:`_scoring_udf`)."""
     global _COSINE_ARROW_UDF
     if _COSINE_ARROW_UDF is None:
-        import numpy as np
         import pandas as pd
-        from pyspark.sql.functions import pandas_udf
 
         def _cos_fn(va, vb):
             n = len(va)
             if n == 0:
                 return pd.Series([], dtype="float64")
-            out = np.empty(n, dtype=np.float64)
-            # Vectorized batch assembly (r12, guide §4.2): the former
-            # per-row ``va.iloc[i]`` loop was interpreted Python per
-            # PAIR — the dominant cost of every candidate-scoring
-            # join at sf1+. isna() + one np.stack over the object
-            # array is C-speed; float32 -> float64 widening via
-            # astype is exact, so every fold input is bit-identical
-            # to the old np.asarray(x, dtype=float64) path.
             null = va.isna().to_numpy() | vb.isna().to_numpy()
             if null.all():
                 return pd.Series([None] * n)
-            idx = np.where(~null)[0]
-            Am = np.stack(va.to_numpy()[idx]).astype(np.float64, copy=False)
-            Bm = np.stack(vb.to_numpy()[idx]).astype(np.float64, copy=False)
-            dim = Am.shape[1]
-            dots = aa = bb = None  # component-sequential folds
-            for j in range(dim):
-                pj = Am[:, j] * Bm[:, j]
-                dots = pj if dots is None else dots + pj
-                sa = Am[:, j] * Am[:, j]
-                aa = sa if aa is None else aa + sa
-                sb = Bm[:, j] * Bm[:, j]
-                bb = sb if bb is None else bb + sb
-            with np.errstate(all="ignore"):
-                vals = dots / (np.sqrt(aa) * np.sqrt(bb))
-            out[idx] = vals
             if null.any():
-                res = out.astype(object)
-                res[null] = None
-                return pd.Series(res)
+                va, vb = va[~null], vb[~null]
+            A, B = _stack(va), _stack(vb)
+            with np.errstate(all="ignore"):
+                vals = _fold(A, B) / (np.sqrt(_fold(A, A)) * np.sqrt(_fold(B, B)))
+            if not null.any():
+                return pd.Series(vals)
+            out = np.empty(n, dtype=object)
+            out[~null] = vals
             return pd.Series(out)
 
-        # asNondeterministic (r12, guide §4.4): every scoring join
-        # filters on the score column (``score >= threshold``), and
-        # the optimizer's filter pushdown duplicated the UDF — one
-        # ArrowEvalPython below the pushed filter, one above for the
-        # projection — so EVERY candidate pair paid the cosine twice
-        # (plan nodes 48+51 in plans/r12/embedding_near_dups_before
-        # .txt). The function is pure; the marker only pins a single
-        # evaluation, exactly the r11 simhash fix.
-        _COSINE_ARROW_UDF = pandas_udf(_cos_fn, "double").asNondeterministic()
+        _COSINE_ARROW_UDF = _scoring_udf(_cos_fn, "double")
     return _COSINE_ARROW_UDF(a, b)
 
 
@@ -128,15 +153,12 @@ def cosine_cogroup_topk_scorer(k: int, query_block: int = 256):
     the global per-query top-``k`` (the global survivors from one
     list form a prefix of that list's own ordering).
 
-    Bit-exactness: cosine is accumulated with the same
-    component-sequential unseeded folds as the :func:`cosine` Arrow
-    kernel (dot, |a|^2, |b|^2 chains in index order; one multiply of
-    the two sqrt's, one divide), so every emitted double matches the
-    per-pair kernel and the DuckDB oracle.
+    Bit-exactness: cosine is accumulated with the same :func:`_fold`
+    chains as the :func:`cosine` Arrow kernel, so every emitted double
+    matches the per-pair kernel and the DuckDB oracle.
 
     ``query_block`` bounds the (queries x list) score matrix so task
     memory stays flat as the probing batch grows."""
-    import numpy as np
     import pandas as pd
 
     def _empty() -> "pd.DataFrame":
@@ -151,32 +173,19 @@ def cosine_cogroup_topk_scorer(k: int, query_block: int = 256):
     def score(left: "pd.DataFrame", right: "pd.DataFrame") -> "pd.DataFrame":
         if len(left) == 0 or len(right) == 0:
             return _empty()
-        # One stack + exact float64 widening per side (r12, §4.2) —
-        # same values as the former per-row asarray loop.
-        Q = np.stack(left["_qv"].to_numpy()).astype(np.float64, copy=False)
-        C = np.stack(right["_cv"].to_numpy()).astype(np.float64, copy=False)
+        Q = _stack(left["_qv"])
+        C = _stack(right["_cv"])
         qids = left["query_id"].to_numpy(dtype=np.int64)
         nbr = right["neighbor_id"].to_numpy(dtype=np.int64)
-        dim = C.shape[1]
-        # |c|^2 per candidate: shared across query blocks, same
-        # component-sequential chain as the cosine kernel.
-        bb = None
-        for j in range(dim):
-            sb = C[:, j] * C[:, j]
-            bb = sb if bb is None else bb + sb
-        sqrt_bb = np.sqrt(bb)
+        # |c| per candidate: shared across query blocks.
+        sqrt_bb = np.sqrt(_fold(C, C))
         n_keep = min(k, len(nbr))
         out_q, out_n, out_s = [], [], []
         for lo in range(0, len(qids), query_block):
             Qb = Q[lo : lo + query_block]
-            dots = aa = None
-            for j in range(dim):
-                pj = Qb[:, j][:, None] * C[:, j][None, :]
-                dots = pj if dots is None else dots + pj
-                sa = Qb[:, j] * Qb[:, j]
-                aa = sa if aa is None else aa + sa
+            dots = _fold(Qb[:, None, :], C[None, :, :])
             with np.errstate(all="ignore"):
-                vals = dots / (np.sqrt(aa)[:, None] * sqrt_bb[None, :])
+                vals = dots / (np.sqrt(_fold(Qb, Qb))[:, None] * sqrt_bb[None, :])
             for i in range(vals.shape[0]):
                 order = np.lexsort((nbr, -vals[i]))[:n_keep]
                 out_q.append(np.full(n_keep, qids[lo + i], dtype=np.int64))
@@ -286,15 +295,15 @@ PLANE_COUNT_POLICY = "adaptive-for-pair-emitters, fixed-for-bucket-indexes"
 def hyperplane_bucket(vec_col: Column, n_planes: int = 8, dim: int = 64) -> Column:
     """Random-hyperplane LSH bucket id in [0, 2^n_planes): bit p is
     the sign of the projection onto deterministic integer plane
-    :func:`plane_weight` — Arrow exact-fold kernel,
-    bit-identical to :func:`hyperplane_bucket_expr` (the projections
-    are the same component-sequential IEEE folds, so every sign bit
-    agrees; pinned by tests/test_pq_adc_kernels.py)."""
+    :func:`plane_weight` — Arrow kernel whose projections are
+    :func:`_fold` chains, so every sign bit agrees with the oracles'
+    ``list_reduce`` projections (pinned by
+    tests/test_pq_adc_kernels.py). It must not appear in a join
+    condition or an aggregate (see :func:`_scoring_udf`); select it
+    into a column first and join on that."""
     key = (n_planes, dim)
     if key not in _HYPERPLANE_UDFS:
-        import numpy as np
         import pandas as pd
-        from pyspark.sql.functions import pandas_udf
 
         w = np.array(
             [
@@ -302,66 +311,16 @@ def hyperplane_bucket(vec_col: Column, n_planes: int = 8, dim: int = 64) -> Colu
                 for p in range(n_planes)
             ]
         )
+        bits = np.arange(n_planes, dtype=np.int64)
 
         def _bucket_fn(vs):
-            n = len(vs)
-            if n == 0:
+            if len(vs) == 0:
                 return pd.Series([], dtype="int64")
-            # Vectorized batch assembly (r12, guide §4.2): the former
-            # ``[[float(x) for x in v] for v in vs]`` double loop was
-            # n*dim interpreted float() calls per evaluation — at the
-            # sf10 fixture (~500k vectors, evaluated once per plan
-            # branch) that was the bulk of the embedding_near_dups
-            # decade-row cost. np.stack + astype(float64) widens
-            # float32 exactly, so the per-plane component-sequential
-            # folds below see bit-identical inputs.
-            mat = np.stack(vs.to_numpy()).astype(np.float64, copy=False)
-            bucket = np.zeros(n, dtype=np.int64)
-            for p in range(n_planes):
-                proj = None  # component-sequential fold
-                for j in range(dim):
-                    t = mat[:, j] * w[p, j]
-                    proj = t if proj is None else proj + t
-                bucket += (proj > 0).astype(np.int64) << p
-            return pd.Series(bucket)
+            proj = _fold(_stack(vs)[:, None, :], w[None, :, :])  # (n, planes)
+            return pd.Series(((proj > 0).astype(np.int64) << bits).sum(axis=1))
 
-        # asNondeterministic (r12, guide §4.4): the bucket column is
-        # a join/group key downstream, and the join-inferred
-        # isnotnull(bucket) filter was pushed below the projection,
-        # duplicating the UDF — TWO ArrowEvalPython nodes per scan
-        # branch in plans/r12/embedding_near_dups_before.txt. The
-        # function is pure; the marker pins one evaluation per branch.
-        _HYPERPLANE_UDFS[key] = pandas_udf(_bucket_fn, "long").asNondeterministic()
+        _HYPERPLANE_UDFS[key] = _scoring_udf(_bucket_fn, "long")
     return _HYPERPLANE_UDFS[key](vec_col)
-
-
-def hyperplane_bucket_expr(vec_col: Column, n_planes: int = 8, dim: int = 64) -> Column:
-    """Expression form of :func:`hyperplane_bucket` — the exact fold
-    the oracles mirror, kept as executable documentation (interpreted
-    HOF evaluation, the slow path)."""
-    # NB: the per-plane lambda must stay single-argument — a
-    # ``lambda i, p=p`` default-arg closure is seen by F.transform as
-    # a binary (element, index) lambda and the index silently replaces
-    # the captured constant.
-    def _plane_term(p: int):
-        return lambda i: (
-            F.element_at(vec_col, i).cast("double")
-            * F.lit(1.0)
-            * (
-                ((F.lit(p * 1009) + (i - 1)) * F.lit(2654435761))
-                % F.lit(2147483647)
-                % F.lit(11)
-                - F.lit(5)
-            )
-        )
-
-    bucket = None
-    for p in range(n_planes):
-        prods = F.transform(F.sequence(F.lit(1), F.lit(dim)), _plane_term(p))
-        proj = F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-        bit = F.when(proj > 0, F.lit(2**p)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    return bucket.cast("long")
 
 
 def bucketed_near_pairs(
@@ -424,16 +383,16 @@ def bucketed_near_pairs(
     )
 
 
-#: Above this many literal cells (centroids x dims) the centroid
-#: table stops being embedded as a codegen literal: a 512x64 array is
-#: ~32k expression nodes (compiles in seconds); the old 4096-centroid
-#: ceiling would have been a ~1M-node tree that stalls janino long
-#: before memory is a concern. Past the cap, assignment switches to an
-#: Arrow-vectorized pandas UDF over the same broadcast centroids —
-#: still scan-side, still no corpus Exchange.
-_LITERAL_CELL_CAP = 512 * 64
-#: Driver-memory guard on the centroid collect itself (model
-#: parameters, k-means-center sized — never corpus sized).
+#: Shortlist margin of :func:`centroid_topk_udf`. A float64 dot of
+#: ``dim`` terms lies within ``dim * 2**-53 * |x| * |c|`` of the true
+#: value in ANY summation order, BLAS's as well as :func:`_fold`'s, so
+#: over the same norms a BLAS cosine and a fold cosine differ by at
+#: most ``(2 * dim + 2) * 2**-53`` (~1.5e-14 at dim 64). A margin of
+#: twice that keeps every cell the full fold would rank first on the
+#: shortlist; 1e-9 covers every dim below ~10**6.
+_SHORTLIST_MARGIN = 1e-9
+#: Driver-memory guard on the centroid set (model parameters,
+#: k-means-center sized — never corpus sized).
 _CENTROID_HARD_CAP = 65536
 
 
@@ -445,7 +404,6 @@ def ivf_topk(
     centroid_mod: int = 31,
     n_probe: int = 2,
     k: int = 5,
-    literal_cell_cap: int = _LITERAL_CELL_CAP,
     centroid_max: int | None = None,
     centroids: list | None = None,
 ) -> DataFrame:
@@ -458,22 +416,12 @@ def ivf_topk(
     a cluster, swap in k-means centroids without touching the plan
     shape.  Scale story: centroids are MODEL PARAMETERS — a
     catalog-sized set collected once at index-build time (exactly
-    where MLlib keeps k-means centers).  Assignment is ALWAYS a pure
-    scan-side projection — NO crossJoin, NO window, NO Exchange on
-    the corpus (the r3 version shuffled the whole corpus through a
-    row_number window here) — in one of two physical forms:
-
-    - ``<= literal_cell_cap`` cells: the EXACT-fold Arrow kernel
-      (:func:`centroid_topk_exact_udf`) — component-sequential numpy
-      folds bit-identical to the literal-expression form the oracles
-      mirror (pinned by tests/test_pq_adc_kernels.py), at Arrow
-      throughput instead of interpreted higher-order-function cost;
-    - above the cap: an Arrow-vectorized pandas UDF holding the
-      centroid matrix in a numpy closure (one BLAS matmul per batch).
-      Same plan shape; float64 matmul may differ from the sequential
-      fold in the last ulp, so exact near-tie assignments can differ
-      — acceptable for an *approximate* index at the scale where
-      thousands of centroids exist.
+    where MLlib keeps k-means centers).  Assignment and probe
+    selection are :func:`assign_nearest_centroid`, a pure scan-side
+    projection — NO crossJoin, NO window, NO Exchange on the corpus
+    (the r3 version shuffled the whole corpus through a row_number
+    window here). :func:`centroid_topk_udf` picks the cells the exact
+    fold picks, at every centroid count.
 
     The probe table (queries × n_probe rows) then broadcasts onto the
     assigned corpus, and only the k-bounded per-query ranking windows
@@ -500,48 +448,16 @@ def ivf_topk(
             key=lambda r: r["cent_id"],
         )
     else:
-        cents = corpus.filter(F.col(id_col) % centroid_mod == 0)
+        seeds = corpus
         if centroid_max is not None:
-            cents = cents.filter(F.col(id_col) < centroid_max)
-        cent_rows = sorted(
-            cents.select(
-                F.col(id_col).alias("cent_id"), F.col(vec_col).alias("_cvec")
-            ).collect(),
-            key=lambda r: r["cent_id"],
-        )
-    if not cent_rows:
-        raise ValueError("no centroids: lower centroid_mod or check id domain")
-    if len(cent_rows) > _CENTROID_HARD_CAP:
-        raise ValueError(
-            f"{len(cent_rows)} centroids exceeds the driver collect budget; "
-            "raise centroid_mod (or plug in trained k-means centers)"
-        )
-    dim = len(cent_rows[0]["_cvec"])
-    if len(cent_rows) * dim > literal_cell_cap:
-        return _ivf_topk_pandas(
-            corpus, queries, cent_rows, id_col, vec_col, n_probe, k
-        )
-    # Assignment and probe selection run the Arrow exact-fold kernel:
-    # bit-identical to the literal-expression fold (ties score DESC,
-    # cent_id ASC — pinned by tests/test_pq_adc_kernels.py) without
-    # the interpreted higher-order-function cost (~0.7 ms/row for
-    # 32x64 cells — Spark never codegens transform/aggregate).
-    base = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-    assigned = base.select(
-        "neighbor_id",
-        "_cv",
-        F.element_at(
-            centroid_topk_exact_udf(cent_rows, 1)(F.col("_cv")), 1
-        ).alias("cent_id"),
+            seeds = corpus.filter(F.col(id_col) < centroid_max)
+        cent_rows = collect_centroids(seeds, id_col, vec_col, centroid_mod)
+    assigned = assign_nearest_centroid(corpus, id_col, vec_col, cent_rows).select(
+        F.col("id").alias("neighbor_id"), F.col("v").alias("_cv"), "cent_id"
     )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
-    probes = q.select(
-        "query_id",
-        "_qv",
-        F.explode(
-            centroid_topk_exact_udf(cent_rows, n_probe)(F.col("_qv"))
-        ).alias("cent_id"),
-    )
+    probes = assign_nearest_centroid(
+        queries, id_col, vec_col, cent_rows, n_best=n_probe
+    ).select(F.col("id").alias("query_id"), F.col("v").alias("_qv"), "cent_id")
     w_rank = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
         assigned.join(F.broadcast(probes), "cent_id")
@@ -560,282 +476,74 @@ def assign_nearest_centroid(
     id_col: str,
     vec_col: str,
     cent_rows: list,
-    literal_cell_cap: int = 64 * 64,
     n_best: int = 1,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Scan-side nearest-centroid assignment shared by the IVF index,
     SemDeDup, the k-means step and the incremental index: returns
-    (id, v, vn, cent_id) with NO exchange on ``df``. ``n_best > 1``
-    yields one row per (input row, nearest cell) — the multi-probe
-    form (cells ordered score DESC, cent_id ASC). Below
-    ``literal_cell_cap`` centroid cells the assignment is
-    BIT-DETERMINISTIC (the oracle-gated path) in either ``impl``:
-    ``"arrow"`` (default) runs :func:`centroid_topk_exact_udf`, whose
-    component-sequential numpy folds are bit-identical to the
-    ``"expr"`` literal-expression fold (pinned per element by
-    tests/test_pq_adc_kernels.py) at 10-100x the throughput — Spark
-    evaluates higher-order functions INTERPRETED (~0.7 ms/row for
-    32x64 cells), so the expression form is kept as executable
-    documentation of the fold the oracles mirror, not the hot path.
-    Above the cap, the BLAS pandas UDF (ties still break to the
-    lowest cent_id; last-ulp ordering may differ — documented
-    acceptable for approximate indexes at the scale where thousands
-    of centroids exist)."""
-    import math
-
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        l2_norm(F.col(vec_col)).alias("vn"),
-    )
-    dim = len(cent_rows[0]["_cvec"]) if cent_rows else 0
-    if cent_rows and len(cent_rows) * dim > literal_cell_cap:
-        if n_best == 1:
-            return base.withColumn(
-                "cent_id", _centroid_assign_udf(cent_rows)(F.col("v"))
-            )
-        return base.withColumn(
-            "cent_id",
-            F.explode(_centroid_probe_udf(cent_rows, n_best)(F.col("v"))),
-        )
-    if impl == "arrow":
-        topk = centroid_topk_exact_udf(cent_rows, n_best)
-        if n_best == 1:
-            return base.withColumn(
-                "cent_id", F.element_at(topk(F.col("v")), 1)
-            )
-        return base.withColumn("cent_id", F.explode(topk(F.col("v"))))
-
-    def _py_norm(vec) -> float:
-        acc = 0.0
-        for x in vec:
-            acc += float(x) * float(x)
-        return acc and math.sqrt(acc)
-
-    cent_lit = F.array(
-        *[
-            F.struct(
-                F.lit(int(r["cent_id"])).cast("long").alias("cent_id"),
-                F.array(*[F.lit(float(x)) for x in r["_cvec"]]).alias("cvec"),
-                F.lit(_py_norm(r["_cvec"])).alias("cnorm"),
-            )
-            for r in cent_rows
-        ]
-    )
-    scored = F.transform(
-        cent_lit,
-        lambda c: F.struct(
-            (dot_exact(F.col("v"), c["cvec"]) / (F.col("vn") * c["cnorm"])).alias("s"),
-            (-c["cent_id"]).alias("nid"),
-        ),
-    )
-    if n_best == 1:
-        return base.withColumn("cent_id", -F.array_max(scored)["nid"])
-    # Struct sort is lexicographic (s DESC, then nid DESC = cent_id
-    # ASC) — identical to the oracle's ORDER BY score DESC, cent_id
-    # ASC with rn <= n_best.
-    best = F.slice(F.sort_array(scored, asc=False), 1, n_best)
-    return (
-        base.withColumn("_pc", F.explode(best))
-        .withColumn("cent_id", -F.col("_pc")["nid"])
-        .drop("_pc")
+    (id, v, cent_id) with NO exchange on ``df``. ``n_best > 1`` yields
+    one row per (input row, nearest cell) — the multi-probe form
+    (cells ordered score DESC, cent_id ASC). Scoring is
+    :func:`centroid_topk_udf`, bit-exact at every centroid count."""
+    topk = centroid_topk_udf(cent_rows, n_best)(F.col(vec_col))
+    cent = F.element_at(topk, 1) if n_best == 1 else F.explode(topk)
+    return df.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), cent.alias("cent_id")
     )
 
 
-def centroid_topk_exact_udf(cent_rows: list, n_best: int):
-    """EXACT-fold multi-probe: per vector the ``n_best`` nearest
-    cells by cosine as an ordered array<long> (score DESC, cent_id
-    ASC — np.lexsort, stable). Unlike :func:`_centroid_probe_udf`
-    (BLAS matmul, library-defined summation order), every dot/norm
-    here is a COMPONENT-SEQUENTIAL fold vectorized across rows —
-    ``acc = acc + x_j * c_j`` over j — which is bit-identical to
-    ``dot_exact`` / the oracle's list_reduce chain, so the selected
-    list set (and any cut at n_best) is hash-gate safe, at Arrow
-    speed instead of interpreted higher-order-function cost."""
-    import math
+def centroid_topk_udf(cent_rows: list, n_best: int):
+    """Per vector, the ``n_best`` nearest centroids by cosine as an
+    ordered array<long> (score DESC, then cent_id ASC).
 
-    import numpy as np
+    The selected cells are the full :func:`_fold` ranking's, bit for
+    bit, at every centroid count: dots and norms are ``dot_exact``'s /
+    the oracle's list_reduce chains, so the cells (and any cut at
+    ``n_best``) are hash-gate safe. One BLAS matmul per batch only
+    shortlists: cells within ``_SHORTLIST_MARGIN`` of a row's
+    ``n_best``-th best BLAS score are rescored by the fold, the rest
+    cannot reach the top ``n_best``. Fold work is ~``n_best`` cells per
+    row instead of all of them. The result must not appear in a join
+    condition or an aggregate (see :func:`_scoring_udf`); derive the
+    cent_id column first and join on that."""
     import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
+    if not cent_rows:
+        raise ValueError("no centroids: lower centroid_mod or check id domain")
+    if len(cent_rows) > _CENTROID_HARD_CAP:
+        raise ValueError(
+            f"{len(cent_rows)} centroids exceeds the driver collect budget; "
+            "raise centroid_mod (or plug in trained k-means centers)"
+        )
     cent_ids = np.array([int(r["cent_id"]) for r in cent_rows], dtype=np.int64)
-    cent_mat = np.array(
-        [[float(x) for x in r["_cvec"]] for r in cent_rows], dtype=np.float64
+    C = np.array(
+        [[float(x) for x in r["_cvec"]] for r in cent_rows], dtype=np.float64, order="F"
     )
-
-    def _seq_norm(row) -> float:
-        acc = 0.0
-        for x in row:
-            acc += float(x) * float(x)
-        return acc and math.sqrt(acc)
-
-    cnorms = np.array([_seq_norm(row) for row in cent_mat], dtype=np.float64)
-    dim = cent_mat.shape[1]
+    cnorms = np.sqrt(_fold(C, C))
+    n_keep = min(n_best, len(C))
 
     def _topk_fn(vs):
         if len(vs) == 0:
             return pd.Series([], dtype="object")
-        # One stack + exact float64 widening (r12, §4.2) — replaces
-        # the n*dim interpreted float() double loop, same values.
-        mat = np.stack(vs.to_numpy()).astype(np.float64, copy=False)
-        dots = None  # (n, k): sequential fold over components
-        qq = None  # (n,): sequential self-dot
-        for j in range(dim):
-            xj = mat[:, j]
-            pj = xj[:, None] * cent_mat[None, :, j]
-            dots = pj if dots is None else dots + pj
-            sq = xj * xj
-            qq = sq if qq is None else qq + sq
-        scores = dots / (np.sqrt(qq)[:, None] * cnorms[None, :])
-        return pd.Series(
-            [
-                cent_ids[np.lexsort((cent_ids, -scores[i]))[:n_best]].tolist()
-                for i in range(len(mat))
-            ]
-        )
+        X = _stack(vs)
+        qnorms = np.sqrt(_fold(X, X))
+        with np.errstate(all="ignore"):
+            approx = (X @ C.T) / np.outer(qnorms, cnorms)
+        approx[np.isnan(approx)] = -np.inf  # zero vectors: fold every cell
+        kth = len(C) - n_keep
+        cut = np.partition(approx, kth, axis=1)[:, kth] - _SHORTLIST_MARGIN
+        r, c = np.nonzero(approx >= cut[:, None])  # row-major: r ascending
+        # X and C are column-major: np.take along their transposes'
+        # rows gathers component-major, so _fold reads contiguous
+        # slices without a transpose copy.
+        Xr, Cc = np.take(X.T, r, axis=1).T, np.take(C.T, c, axis=1).T
+        with np.errstate(all="ignore"):
+            scores = _fold(Xr, Cc) / (qnorms[r] * cnorms[c])
+        order = np.lexsort((cent_ids[c], -scores, r))
+        first = np.searchsorted(r, np.arange(len(X)))
+        picks = c[order[first[:, None] + np.arange(n_keep)]]
+        return pd.Series(list(cent_ids[picks]))
 
-    # asNondeterministic (r12, guide §4.4): cent_id derived from this
-    # UDF is a downstream join key; the join-inferred isnotnull filter
-    # was pushed below the projection and duplicated the UDF (two
-    # stacked ArrowEvalPython nodes per scan branch in the ivf_topk /
-    # semdedup_prune before-plans). Pure function; single evaluation.
-    return pandas_udf(_topk_fn, "array<long>").asNondeterministic()
-
-
-def _centroid_probe_udf(cent_rows: list, n_best: int):
-    """BLAS multi-probe twin of :func:`_centroid_assign_udf`: the
-    ``n_best`` nearest cells per vector (stable argsort — ties to the
-    lowest cent_id), returned as array<long> for a downstream
-    explode."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    cent_ids = np.array([int(r["cent_id"]) for r in cent_rows], dtype=np.int64)
-    cent_mat = np.array(
-        [[float(x) for x in r["_cvec"]] for r in cent_rows], dtype=np.float64
-    )
-    cnorms = np.sqrt((cent_mat * cent_mat).sum(axis=1))
-
-    def _probe_fn(vs):
-        if len(vs) == 0:
-            return pd.Series([], dtype="object")
-        # One stack + exact float64 widening (r12, §4.2) — replaces
-        # the n*dim interpreted float() double loop, same values.
-        mat = np.stack(vs.to_numpy()).astype(np.float64, copy=False)
-        vnorms = np.sqrt((mat * mat).sum(axis=1))
-        scores = (mat @ cent_mat.T) / np.outer(vnorms, cnorms)
-        order = np.argsort(-scores, axis=1, kind="stable")[:, :n_best]
-        return pd.Series([cent_ids[row].tolist() for row in order])
-
-    # asNondeterministic — same §4.4 single-evaluation pin as the
-    # exact-fold twin above.
-    return pandas_udf(_probe_fn, "array<long>").asNondeterministic()
-
-
-def _centroid_assign_udf(cent_rows: list):
-    """BLAS nearest-centroid argmax as an Arrow pandas UDF — the
-    above-literal-cap assignment path shared by the IVF index and
-    SemDeDup. cent_ids are sorted ascending and np.argmax keeps the
-    FIRST max, so ties break to the lowest cent_id exactly like the
-    codegen literal fold; float64 matmul may differ from the
-    sequential fold in the last ulp (documented acceptable for
-    approximate indexes at the scale where thousands of centroids
-    exist)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    cent_ids = np.array([int(r["cent_id"]) for r in cent_rows], dtype=np.int64)
-    cent_mat = np.array(
-        [[float(x) for x in r["_cvec"]] for r in cent_rows], dtype=np.float64
-    )
-    cnorms = np.sqrt((cent_mat * cent_mat).sum(axis=1))
-
-    def _assign_fn(vs):
-        if len(vs) == 0:
-            return pd.Series([], dtype="int64")
-        # One stack + exact float64 widening (r12, §4.2) — replaces
-        # the n*dim interpreted float() double loop, same values.
-        mat = np.stack(vs.to_numpy()).astype(np.float64, copy=False)
-        vnorms = np.sqrt((mat * mat).sum(axis=1))
-        scores = (mat @ cent_mat.T) / np.outer(vnorms, cnorms)
-        return pd.Series(cent_ids[np.argmax(scores, axis=1)])
-
-    # asNondeterministic — same §4.4 single-evaluation pin.
-    return pandas_udf(_assign_fn, "long").asNondeterministic()
-
-
-def _ivf_topk_pandas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    cent_rows: list,
-    id_col: str,
-    vec_col: str,
-    n_probe: int,
-    k: int,
-) -> DataFrame:
-    """Large-centroid-set IVF assignment: the centroid matrix rides a
-    numpy closure into Arrow-batched pandas UDFs (one float64 BLAS
-    matmul per batch) instead of a codegen literal. Plan shape is
-    identical to the literal path — scan-side assignment, broadcast
-    probe join, k-bounded ranking windows — and the FINAL candidate
-    scores still use the bit-deterministic ``cosine`` expression;
-    only centroid argmax/probe selection is BLAS-ordered."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    cent_ids = np.array([int(r["cent_id"]) for r in cent_rows], dtype=np.int64)
-    cent_mat = np.array(
-        [[float(x) for x in r["_cvec"]] for r in cent_rows], dtype=np.float64
-    )
-    cnorms = np.sqrt((cent_mat * cent_mat).sum(axis=1))
-
-    def _scores(vs):
-        # One stack + exact float64 widening (r12, §4.2) — replaces
-        # the n*dim interpreted float() double loop, same values.
-        mat = np.stack(vs.to_numpy()).astype(np.float64, copy=False)
-        vnorms = np.sqrt((mat * mat).sum(axis=1))
-        return (mat @ cent_mat.T) / np.outer(vnorms, cnorms)
-
-    def _assign_fn(vs):
-        if len(vs) == 0:
-            return pd.Series([], dtype="int64")
-        # argmax picks the FIRST max; cent_ids are sorted ascending,
-        # so ties break to the lowest cent_id like the literal path.
-        return pd.Series(cent_ids[np.argmax(_scores(vs), axis=1)])
-
-    def _probe_fn(vs):
-        if len(vs) == 0:
-            return pd.Series([], dtype="object")
-        order = np.argsort(-_scores(vs), axis=1, kind="stable")[:, :n_probe]
-        return pd.Series([cent_ids[row].tolist() for row in order])
-
-    # asNondeterministic — same §4.4 single-evaluation pin as the
-    # literal-cap path.
-    _assign = pandas_udf(_assign_fn, "long").asNondeterministic()
-    _probe = pandas_udf(_probe_fn, "array<long>").asNondeterministic()
-
-    assigned = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-    ).withColumn("cent_id", _assign(F.col("_cv")))
-    probes = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-    ).select("query_id", "_qv", F.explode(_probe(F.col("_qv"))).alias("cent_id"))
-    w_rank = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        assigned.join(F.broadcast(probes), "cent_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("_qv"), F.col("_cv")).alias("score"),
-        )
-        .withColumn("rank", F.row_number().over(w_rank).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _scoring_udf(_topk_fn, "array<long>")
 
 
 def multiprobe_bucket_topk(
@@ -899,20 +607,14 @@ def collect_centroids(
 ) -> list:
     """Deterministic centroid seed set (every ``centroid_mod``-th
     vector), collected driver-side — model parameters, never corpus
-    data; hard-capped like ivf_topk's collect."""
-    rows = sorted(
+    data. :func:`centroid_topk_udf` rejects an empty set or one over
+    ``_CENTROID_HARD_CAP`` rows."""
+    return sorted(
         corpus.filter(F.col(id_col) % centroid_mod == 0)
         .select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("_cvec"))
         .collect(),
         key=lambda r: r["cent_id"],
     )
-    if not rows:
-        raise ValueError("no centroids: lower centroid_mod or check id domain")
-    if len(rows) > _CENTROID_HARD_CAP:
-        raise ValueError(
-            f"{len(rows)} centroids exceeds the driver collect budget"
-        )
-    return rows
 
 
 def kmeans_update_step(
@@ -921,11 +623,11 @@ def kmeans_update_step(
     vec_col: str = "embedding",
     centroid_mod: int = 31,
     scale: int = 10**6,
-    literal_cell_cap: int = 64 * 64,
 ) -> DataFrame:
     """One distributed k-means (Lloyd) update: assign every vector to
-    its nearest seed centroid (cosine, scan-side literal argmax — the
-    exact assignment ivf_topk indexes with, NO corpus Exchange), then
+    its nearest seed centroid (cosine, the scan-side
+    :func:`assign_nearest_centroid` ivf_topk indexes with, NO corpus
+    Exchange), then
     recompute each centroid as the member mean, per dimension:
     ``(cent_id, dim, n_members, mean_micro)``.
 
@@ -937,17 +639,11 @@ def kmeans_update_step(
     cannot be regression-tested. Iterating = feeding the output back
     as the next seed set; the per-step cost is one scan + one
     (cent_id, dim)-keyed exchange of bounded size (centroids x dims
-    rows), which is the MLlib k-means superstep shape.
-
-    Like :func:`semdedup`, assignment hops to the shared BLAS pandas
-    UDF above ``literal_cell_cap`` literal cells — training runs use
-    hundreds-to-thousands of centroids, where the codegen literal
-    fold's N x C expression cost dominates the step (r6 sf1 sweep);
-    the oracle-gated small-sf path stays the bit-exact literal
-    fold."""
+    rows), which is the MLlib k-means superstep shape. Assignment is
+    :func:`centroid_topk_udf`'s exact ranking at every seed count."""
     cent_rows = collect_centroids(corpus, id_col, vec_col, centroid_mod)
     assigned = assign_nearest_centroid(
-        corpus, id_col, vec_col, cent_rows, literal_cell_cap
+        corpus, id_col, vec_col, cent_rows
     ).select(F.col("v").alias("_cv"), "cent_id")
     return _kmeans_member_means(assigned, scale)
 
@@ -979,7 +675,6 @@ def semdedup(
     vec_col: str = "embedding",
     centroid_mod: int = 31,
     threshold: float = 0.4,
-    literal_cell_cap: int = 64 * 64,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic dedup by clustering the
     embedding space and pruning, WITHIN each cluster, every vector
@@ -989,8 +684,8 @@ def semdedup(
     comparison tractable: candidate pairs are only generated inside a
     cluster, exactly the published algorithm's trick.
 
-    Scale shape: assignment is the scan-side literal-centroid argmax
-    ivf_topk/kmeans use (NO corpus exchange); the only shuffle is the
+    Scale shape: assignment is the scan-side nearest-centroid
+    projection ivf_topk/kmeans use (NO corpus exchange); the only shuffle is the
     within-cluster self-join keyed on cent_id. Cluster size is the
     knob bounding pair work (k ~ n/avg_size); a pathologically hot
     cluster is handled like any hot join key (salt or split the
@@ -999,15 +694,9 @@ def semdedup(
     Returns (id, cent_id, pruned 0/1).
     """
     cent_rows = collect_centroids(corpus, id_col, vec_col, centroid_mod)
-    # Assignment is the shared two-path helper: codegen literal fold
-    # below the budget (the oracle-gated bit-exact form), BLAS pandas
-    # UDF above it (the r6 sf1 bench measured the literal fold at
-    # N x C cost here — 15.8x time for 10x data with ~282 literal
-    # centroids). Pair scoring below stays the bit-deterministic
-    # expression on both paths.
-    assigned = assign_nearest_centroid(
-        corpus, id_col, vec_col, cent_rows, literal_cell_cap
-    )
+    # Assignment is the shared scan-side scorer (exact at every seed
+    # count); pair scoring below is the bit-exact cosine kernel.
+    assigned = assign_nearest_centroid(corpus, id_col, vec_col, cent_rows)
 
     a = assigned.alias("a")
     b = assigned.alias("b")
@@ -1021,7 +710,7 @@ def semdedup(
     # (min-of-3, new wins every pair), outputs asserted identical on
     # the full fixture at both SFs. Bit-equality holds because the
     # Arrow kernel's component-sequential folds reproduce
-    # dot_exact / (vn_a * vn_b) exactly (same chains, one multiply,
+    # dot_exact / (|a| * |b|) exactly (same chains, one multiply,
     # one divide — pinned by tests/test_pq_adc_kernels.py). The
     # semi-join's per-row early-out bought nothing: matches are rare,
     # so every pair paid the interpreted fold anyway.
@@ -1109,30 +798,16 @@ def train_spherical_kmeans(sample, k: int = 32, iters: int = 10):
     empty clusters keep their centroid. No RNG — bit-reproducible,
     same discipline as every other committed artifact.
 
-    The assignment scores fold COMPONENT-SEQUENTIALLY (``S += x_j *
-    c_j`` over j, vectorized across rows) instead of a BLAS GEMM:
-    GEMM blocking — and therefore its summation order — follows the
-    host CPU's kernel dispatch, and a host change silently broke
-    bit-equality of the committed artifact by one ulp (r9 finding).
-    Elementwise ufuncs neither fuse nor reassociate, so the fold is
-    identical on every host — the same exact-fold discipline the
-    Arrow serving kernels use."""
-    import numpy as np
-
+    The assignment scores are the :func:`_fold` the Arrow serving
+    kernels use, not a BLAS GEMM: GEMM blocking — and therefore its
+    summation order — follows the host CPU's kernel dispatch, and a
+    host change silently broke bit-equality of the committed artifact
+    by one ulp (r9 finding)."""
     X = np.asarray(sample, dtype=np.float64)
     Xn = X / (np.linalg.norm(X, axis=1, keepdims=True) + 1e-12)
     C = Xn[:k].copy()
     for _ in range(iters):
-        # Preallocated temporary (r9 advisor): one ufunc writes into
-        # tmp, one adds it — same component-sequential fold order (so
-        # bit-equality of the committed artifact is preserved), half
-        # the allocations of `S += a * b` per dimension.
-        S = np.zeros((Xn.shape[0], C.shape[0]))
-        tmp = np.empty_like(S)
-        for j in range(Xn.shape[1]):
-            np.multiply(Xn[:, j : j + 1], C[None, :, j], out=tmp)
-            S += tmp
-        a = S.argmax(axis=1)
+        a = _fold(Xn[:, None, :], C[None, :, :]).argmax(axis=1)
         for c in range(k):
             mask = a == c
             if mask.any():
@@ -1144,16 +819,12 @@ def train_spherical_kmeans(sample, k: int = 32, iters: int = 10):
 
 
 def save_ivf_centroids(cents, path: str) -> None:
-    import numpy as np
-
     np.savez(path, centroids=np.asarray(cents, dtype=np.float64))
 
 
 def load_ivf_centroids(path: str = DEFAULT_IVF_CENTROIDS) -> list:
     """[(cent_id, vector)] with cent_id = row index — the model-
     parameter form :func:`ivf_topk`'s ``centroids`` argument takes."""
-    import numpy as np
-
     with np.load(path) as z:
         C = z["centroids"].astype(np.float64)
     return [(i, [float(x) for x in C[i]]) for i in range(len(C))]

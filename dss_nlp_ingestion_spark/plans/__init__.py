@@ -92,9 +92,8 @@ for _name, _note in {
         "aggregates + coalescing join in one row by design"
     ),
     "semdedup_prune": (
-        "BLAS pandas centroid assignment (above the literal-plan "
-        "budget) + per-cluster pruning; sound at scale, Arrow-bound "
-        "at toy SF"
+        "BLAS-shortlisted exact centroid assignment + per-cluster "
+        "pruning; sound at scale, Arrow-bound at toy SF"
     ),
     "simhash_near_dups_banded": (
         "60-bit pigeonhole banding self-join — candidate-pair-bound "

@@ -929,14 +929,18 @@ def dup_canonical_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Edit-distance near-dup (blocked candidate pairs + exact Levenshtein)
 # ---------------------------------------------------------------------------
 
-_EDIT_DIST_ORACLE = """
+#: Largest edit distance edit_distance_dups reports — one value for
+#: the length prefilter, the banded levenshtein and the oracle.
+_EDIT_DIST_MAX = 20
+
+_EDIT_DIST_ORACLE = f"""
 WITH blocked AS (
   SELECT doc_id, text, substr(text, 1, 12) AS blk FROM documents
 )
 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        CAST(levenshtein(a.text, b.text) AS BIGINT) AS dist
 FROM blocked a JOIN blocked b ON a.blk = b.blk AND a.doc_id < b.doc_id
-WHERE levenshtein(a.text, b.text) <= 20
+WHERE levenshtein(a.text, b.text) <= {_EDIT_DIST_MAX}
 """
 
 
@@ -976,10 +980,10 @@ def edit_distance_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("a.doc_id") < F.col("b.doc_id"))
         & (
             F.abs(F.length(F.col("a.text")) - F.length(F.col("b.text")))
-            <= F.lit(20)
+            <= F.lit(_EDIT_DIST_MAX)
         ),
     )
-    dist = F.levenshtein(F.col("a.text"), F.col("b.text"), 20)
+    dist = F.levenshtein(F.col("a.text"), F.col("b.text"), _EDIT_DIST_MAX)
     return pairs.filter(dist >= 0).select(
         F.col("a.doc_id").alias("id_a"),
         F.col("b.doc_id").alias("id_b"),

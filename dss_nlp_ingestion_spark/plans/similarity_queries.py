@@ -596,7 +596,7 @@ def _ivf_inc_build_pq(spark: SparkSession, sf_dir: str, cents: list):
         pq_code_array_udf,
     )
     from dss_nlp_ingestion_spark.operators.similarity import (
-        centroid_topk_exact_udf,
+        centroid_topk_udf,
     )
     from dss_nlp_ingestion_spark.sources import txlog
 
@@ -610,7 +610,7 @@ def _ivf_inc_build_pq(spark: SparkSession, sf_dir: str, cents: list):
         F.col("vec_id").alias("id"),
         pq_code_array_udf(model)(F.col("embedding")).alias("codes"),
         F.element_at(
-            centroid_topk_exact_udf(cents, 1)(F.col("embedding")), 1
+            centroid_topk_udf(cents, 1)(F.col("embedding")), 1
         ).alias("cent_id"),
     )
     path = tempfile.mkdtemp(prefix="dss_ivfadc_") + "/index"
@@ -747,7 +747,7 @@ def _ivf_inc_adc_probe(spark: SparkSession, ctx) -> DataFrame:
         pq_query_lut_udf,
     )
     from dss_nlp_ingestion_spark.operators.similarity import (
-        centroid_topk_exact_udf,
+        centroid_topk_udf,
         cosine,
     )
     from dss_nlp_ingestion_spark.sources import txlog
@@ -763,7 +763,7 @@ def _ivf_inc_adc_probe(spark: SparkSession, ctx) -> DataFrame:
     # (query, list) probe rows; the batch (not the index) broadcasts.
     qprep = incoming.select(
         F.col("vec_id").alias("query_id"),
-        centroid_topk_exact_udf(cents, n_probe)(F.col("embedding")).alias(
+        centroid_topk_udf(cents, n_probe)(F.col("embedding")).alias(
             "_cents"
         ),
         pq_query_lut_udf(model)(F.col("embedding")).alias("_lut"),
@@ -824,7 +824,7 @@ def _ivf_inc_adc_probe(spark: SparkSession, ctx) -> DataFrame:
         F.col("vec_id").alias("id"),
         pq_code_array_udf(model)(F.col("embedding")).alias("codes"),
         F.element_at(
-            centroid_topk_exact_udf(cents, 1)(F.col("embedding")), 1
+            centroid_topk_udf(cents, 1)(F.col("embedding")), 1
         ).alias("cent_id"),
     )
     txlog.append(batch_assigned, path, stats_cols=["cent_id"])

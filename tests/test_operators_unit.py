@@ -673,13 +673,15 @@ def test_asof_join_strict_vs_nonstrict_same_instant(spark):
     assert loose.asof_click_id == 9    # same-instant row matched
 
 
-def test_ivf_pandas_fallback_matches_literal_path(spark):
-    """Above the literal-cell cap, IVF assignment switches to the
-    Arrow/numpy path; on tie-free data the two paths must produce
-    IDENTICAL results (same assignments, same probes, and the final
-    scores go through the same exact cosine expression either way)."""
+def test_ivf_pandas_fallback_matches_literal_path(spark, monkeypatch):
+    """IVF centroid scoring folds only the BLAS-shortlisted cells; with
+    a margin wide enough to shortlist every cell (the full fold) the
+    index must produce IDENTICAL results (same assignments, same
+    probes, and the final scores go through the same exact cosine
+    kernel either way)."""
     import random
 
+    from dss_nlp_ingestion_spark.operators import similarity
     from dss_nlp_ingestion_spark.operators.similarity import ivf_topk
 
     rng = random.Random(7)
@@ -689,7 +691,8 @@ def test_ivf_pandas_fallback_matches_literal_path(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = df.filter("vec_id < 5")
     lit = ivf_topk(df, q, centroid_mod=7, n_probe=2, k=3)
-    pnd = ivf_topk(df, q, centroid_mod=7, n_probe=2, k=3, literal_cell_cap=1)
+    monkeypatch.setattr(similarity, "_SHORTLIST_MARGIN", 4.0)
+    pnd = ivf_topk(df, q, centroid_mod=7, n_probe=2, k=3)
     norm = lambda d: sorted(
         (r.query_id, r.neighbor_id, repr(r.score), r.rank) for r in d.collect()
     )
@@ -698,10 +701,8 @@ def test_ivf_pandas_fallback_matches_literal_path(spark):
 
 
 def test_ivf_literal_cap_512_centroids_compiles(spark):
-    """The literal path at its cap — 512 centroids x 64 dims = 32k
-    literal cells — must codegen and execute in bounded time (the old
-    4096-centroid ceiling was a ~1M-node expression tree that stalls
-    janino; this pins the guard at a size that demonstrably works)."""
+    """Exact centroid scoring at 512 centroids x 64 dims (above the
+    448-centroid sf10 tier) must execute in bounded time."""
     import random
     import time
 
@@ -718,7 +719,7 @@ def test_ivf_literal_cap_512_centroids_compiles(spark):
     n = out.count()
     elapsed = time.monotonic() - t0
     assert n > 0
-    assert elapsed < 120, f"512-centroid literal plan took {elapsed:.0f}s"
+    assert elapsed < 120, f"512-centroid exact-fold plan took {elapsed:.0f}s"
 
 
 def test_jpeg_codec_blockwise_constant_exact():
@@ -1657,10 +1658,11 @@ def test_batched_bmp_paths_match_scalar_codec():
         list(bmp_pixel_stats_batch(iter([broken])))
 
 
-def test_assign_nearest_centroid_paths_agree(spark):
-    """r6: the literal-fold and BLAS-pandas assignment paths (and
-    their n_best multi-probe forms) must agree away from float ties —
-    synthetic well-separated vectors make every argmax decisive."""
+def test_assign_nearest_centroid_paths_agree(spark, monkeypatch):
+    """r6: the shortlisted assignment and the full fold over every cell
+    (and their n_best multi-probe forms) must agree — synthetic
+    well-separated vectors make every argmax decisive."""
+    from dss_nlp_ingestion_spark.operators import similarity
     from dss_nlp_ingestion_spark.operators.similarity import (
         assign_nearest_centroid,
         collect_centroids,
@@ -1674,22 +1676,71 @@ def test_assign_nearest_centroid_paths_agree(spark):
         rows.append((i, v))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     cents = collect_centroids(df, "vec_id", "embedding", 15)  # ids 0,15,30,45
+
+    def _assign(margin, n_best):
+        monkeypatch.setattr(similarity, "_SHORTLIST_MARGIN", margin)
+        return {
+            (r["id"], r["cent_id"])
+            for r in assign_nearest_centroid(
+                df, "vec_id", "embedding", cents, n_best=n_best
+            ).collect()
+        }
+
     for n_best in (1, 2):
-        lit = {
-            (r["id"], r["cent_id"])
-            for r in assign_nearest_centroid(
-                df, "vec_id", "embedding", cents,
-                literal_cell_cap=10**9, n_best=n_best,
-            ).collect()
-        }
-        blas = {
-            (r["id"], r["cent_id"])
-            for r in assign_nearest_centroid(
-                df, "vec_id", "embedding", cents,
-                literal_cell_cap=0, n_best=n_best,
-            ).collect()
-        }
+        lit = _assign(4.0, n_best)
+        blas = _assign(1e-9, n_best)
         assert lit == blas and len(lit) == 60 * n_best
+
+
+def test_centroid_shortlist_matches_full_fold_on_ties(spark, monkeypatch):
+    """The BLAS shortlist must rank exactly like the full fold where it
+    is most fragile: exact score ties (duplicate centroids, a query
+    equal to a centroid), zero vectors (NaN scores) and ``n_best``
+    above the centroid count."""
+    import numpy as np
+    import pandas as pd
+
+    from dss_nlp_ingestion_spark.operators import similarity
+
+    rng = np.random.default_rng(5)
+    base = rng.standard_normal((12, 16)).astype(np.float32)
+    cents = np.concatenate([base, base[:4], np.zeros((1, 16), np.float32)])
+    cent_rows = [
+        {"cent_id": 100 - i, "_cvec": [float(x) for x in v]}
+        for i, v in enumerate(cents)
+    ]
+    cent_rows.sort(key=lambda r: r["cent_id"])
+    qs = np.concatenate(
+        [base, rng.standard_normal((40, 16)).astype(np.float32),
+         np.zeros((1, 16), np.float32)]
+    )
+    vs = pd.Series(list(qs))
+
+    def _rank(margin, n_best):
+        monkeypatch.setattr(similarity, "_SHORTLIST_MARGIN", margin)
+        fn = similarity.centroid_topk_udf(cent_rows, n_best).func
+        return [list(x) for x in fn(vs)]
+
+    for n_best in (1, 2, 5, 20):
+        assert _rank(1e-9, n_best) == _rank(4.0, n_best), n_best
+
+
+def test_centroid_topk_udf_rejects_empty_or_oversized_set(spark):
+    """Caller-supplied centroids pass the same checks as collected
+    ones, at plan-build time."""
+    import pytest
+
+    from dss_nlp_ingestion_spark.operators import similarity
+
+    df = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="no centroids"):
+        similarity.ivf_topk(df, df, centroids=[])
+    too_many = [
+        {"cent_id": i, "_cvec": [1.0]}
+        for i in range(similarity._CENTROID_HARD_CAP + 1)
+    ]
+    with pytest.raises(ValueError, match="collect budget"):
+        similarity.centroid_topk_udf(too_many, 1)
 
 
 def test_bmp_batch_truncated_header_error_parity():
